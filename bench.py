@@ -4,7 +4,11 @@ sf0.1) on local[$SPARK_GRAFT_CPUS].
 Times each query end-to-end (full plan execution forced via a noop-style
 count over every column-dependent operator; results are tiny so collect
 is the action). Prints ONE JSON line:
-  {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...}, "sf": ...}
+  {"metric": ..., "value": total_sec, "unit": "sec", "queries": {...},
+   "failed": [...], "sf": ...}
+A query that raises is recorded as ``{"error": ...}`` under its name and
+listed in ``failed``; the rest of the suite still runs, and the totals
+sum the queries that finished.
 
 Comparison target (BASELINE.md §6 note): the reference's set-oriented
 throughput rows, not its µs-scale point ops — see SURVEY.md §6.
@@ -82,6 +86,45 @@ BENCH_OVERRIDES = {
 }
 
 
+def _timed(timings: dict, name: str, build):
+    """Time ``build()`` plus a count() that executes the full plan
+    (aggregates/joins/loops) into ``timings[name]`` and return the
+    DataFrame. A failure stores ``{"error": ...}`` and returns None, so
+    one broken query never aborts the suite or suppresses the JSON
+    line."""
+    import gc
+
+    t0 = time.perf_counter()
+    try:
+        df = build()
+        n = df.count()
+    except Exception as exc:  # noqa: BLE001 — isolate any query failure
+        df = None
+        timings[name] = _error(name, exc)
+    else:
+        timings[name] = round(time.perf_counter() - t0, 3)
+        print(f"# {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
+    # Release py4j refs so the ContextCleaner can drop the previous
+    # query's localCheckpoint blocks — otherwise storage memory and GC
+    # pressure accumulate across the suite and later queries pay.
+    gc.collect()
+    return df
+
+
+def _error(name: str, exc: Exception) -> dict:
+    """Log ``exc`` with its traceback to stderr; return the JSON record."""
+    import traceback
+
+    msg = " ".join(f"{type(exc).__name__}: {exc}".split())[:300]
+    print(f"# {name}: FAILED {msg}", file=sys.stderr)
+    traceback.print_exception(exc, file=sys.stderr)
+    return {"error": msg}
+
+
+def _seconds(timings: dict) -> float:
+    return round(sum(v for v in timings.values() if isinstance(v, float)), 3)
+
+
 # Store-variant graph queries: at 100 TB the graph's resting state is
 # the bucketed durable store, so the hottest expands are ALSO measured
 # off a save_graph(buckets=N)/load_graph snapshot (commit cost is the
@@ -137,13 +180,10 @@ def _bench_store(spark, sf_dir, timings, exchanges) -> None:
              + [(q, gb, "store") for q in _STORE_QUERIES]
         for key, graph, tag in jobs:
             name = f"{key}_{tag}"
-            t0 = time.perf_counter()
-            df = graph.cypher(_STORE_QUERIES[key])
-            n = df.count()
-            timings[name] = round(time.perf_counter() - t0, 3)
-            exchanges[name] = _n_exchanges(df)
-            print(f"# {name}: {timings[name]}s ({n} rows, "
-                  f"{exchanges[name]} exchanges)", file=sys.stderr)
+            df = _timed(timings, name,
+                        lambda: graph.cypher(_STORE_QUERIES[key]))
+            if df is not None:
+                exchanges[name] = _n_exchanges(df)
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
@@ -179,30 +219,22 @@ def main() -> None:
         return s
     spark.range(32).select(_warm(_F.col("id"))).count()
 
-    import gc
+    def query(name):
+        fn = BENCH_OVERRIDES.get(name) or qs[name]
+        return lambda: fn(spark, sf_dir)
 
-    timings: dict[str, float] = {}
-    store_timings: dict[str, float] = {}
+    timings: dict = {}
+    store_timings: dict = {}
     store_exchanges: dict[str, int] = {}
     for name in HEADLINE:
-        fn = BENCH_OVERRIDES.get(name) or qs[name]
-        t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        n = df.count()  # executes the full plan (aggregates/joins/loops)
-        timings[name] = round(time.perf_counter() - t0, 3)
-        print(f"# {name}: {timings[name]}s ({n} rows)", file=sys.stderr)
-        # Release py4j refs so the ContextCleaner can drop the previous
-        # query's localCheckpoint blocks — otherwise storage memory and
-        # GC pressure accumulate across the suite and later queries pay.
-        df = None
-        gc.collect()
+        _timed(timings, name, query(name))
 
     # ---- round-3 pipeline operators, timed in their OWN dict so
     # headline_suite_seconds stays comparable across rounds. t8 is the
     # composed curate() pass (filter→redact→dedup→split on a 1.2×
     # twinned corpus); d9 shuffles (hash,doc,pos) triples for the
     # first-occurrence window; e6/e8 are Arrow-matmul assignment scans.
-    pipeline_timings: dict[str, float] = {}
+    pipeline_timings: dict = {}
     # session-6 additions: SNM dedup (global-rank band join), funnel +
     # retention + rolling DAU (user-keyed event analytics), one-pass
     # profile, SCC + betweenness (driver-Tarjan / tree-Brandes at this
@@ -240,14 +272,7 @@ def main() -> None:
                  "o3_topk_group", "e13_mmr_topk", "k4_key_skew",
                  "r6_salted_join", "t23_vocab_coverage",
                  "w14_stream_cms", "s16_compact"]:
-        t0 = time.perf_counter()
-        df = qs[name](spark, sf_dir)
-        n = df.count()
-        pipeline_timings[name] = round(time.perf_counter() - t0, 3)
-        print(f"# {name}: {pipeline_timings[name]}s ({n} rows)",
-              file=sys.stderr)
-        df = None
-        gc.collect()
+        _timed(pipeline_timings, name, query(name))
 
     # ---- second (warm) pass over the headline suite. The cold pass
     # above stays the primary, round-comparable metric; this one
@@ -255,19 +280,17 @@ def main() -> None:
     # (Janino plan compilation, JIT, Python-worker spin-up) and from
     # this VM's ±40% wall-clock noise — on a long-lived cluster the
     # warm number is what repeated pipeline runs actually pay.
-    warm_timings: dict[str, float] = {}
+    warm_timings: dict = {}
     for name in HEADLINE:
-        fn = BENCH_OVERRIDES.get(name) or qs[name]
-        t0 = time.perf_counter()
-        fn(spark, sf_dir).count()
-        warm_timings[name] = round(time.perf_counter() - t0, 3)
-        gc.collect()
-    print(f"# warm suite: {round(sum(warm_timings.values()), 3)}s",
-          file=sys.stderr)
+        _timed(warm_timings, name, query(name))
+    print(f"# warm suite: {_seconds(warm_timings)}s", file=sys.stderr)
 
     # ---- durable-store variant of the hottest graph expands (separate
     # dicts: headline_suite_seconds stays comparable across rounds)
-    _bench_store(spark, sf_dir, store_timings, store_exchanges)
+    try:
+        _bench_store(spark, sf_dir, store_timings, store_exchanges)
+    except Exception as exc:  # noqa: BLE001 — e.g. the snapshot commit
+        store_timings["store_setup"] = _error("store_setup", exc)
 
     # ---- throughput rows comparable to BASELINE.md's set-oriented
     # metrics (elem/s). The reference's latency rows are µs point ops on
@@ -287,7 +310,7 @@ def main() -> None:
     # probe measures 2.1 M cold and ~14 M warm back-to-back on this VM.
     # BASELINE.md's reference numbers are steady-state set throughput,
     # so warm is the comparable measurement.
-    tp: dict[str, int] = {}
+    tp: dict = {}
 
     def _scan():
         n = 50_000_000
@@ -321,20 +344,26 @@ def main() -> None:
     for key, probe in [("vertex_scan_elems_per_s", _scan),
                        ("batch_create_elems_per_s", _create),
                        ("one_hop_match_elems_per_s", _one_hop)]:
-        probe()                                   # warm-up, unmeasured
-        t0 = time.perf_counter()
-        n = probe()
-        tp[key] = int(n / (time.perf_counter() - t0))
+        try:
+            probe()                               # warm-up, unmeasured
+            t0 = time.perf_counter()
+            n = probe()
+            tp[key] = int(n / (time.perf_counter() - t0))
+        except Exception as exc:  # noqa: BLE001
+            tp[key] = _error(key, exc)
     print(f"# throughput (warm): {tp}", file=sys.stderr)
 
-    total = round(sum(timings.values()), 3)
+    failed = sorted({name for d in (timings, pipeline_timings, warm_timings,
+                                    store_timings, tp)
+                     for name, v in d.items() if isinstance(v, dict)})
     print(json.dumps({
         "metric": "headline_suite_seconds",
-        "value": total,
+        "value": _seconds(timings),
         "unit": "sec",
         "queries": timings,
+        "failed": failed,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-        "warm_suite_seconds": round(sum(warm_timings.values()), 3),
+        "warm_suite_seconds": _seconds(warm_timings),
         "queries_warm": warm_timings,
         "pipeline_queries_sec": pipeline_timings,
         "store_queries_sec": store_timings,

@@ -478,7 +478,12 @@ def _num_result(lt, rt):
 
 
 def _entity_struct(b: Binding) -> Column:
-    return F.struct(*[F.col(c).alias(p) for p, c in sorted(b.cols.items())])
+    """The entity as one struct value; NULL where its key column is NULL
+    (an unmatched OPTIONAL MATCH binding), so ``count(b)``, ``b IS NULL``
+    and ``RETURN b`` see a null entity, not a struct of nulls."""
+    return F.when(
+        F.col(_key_col(b)).isNotNull(),
+        F.struct(*[F.col(c).alias(p) for p, c in sorted(b.cols.items())]))
 
 
 def _compile_func(ctx: _Ctx, e: FuncCall, df):
@@ -655,6 +660,10 @@ def _compile_path(ctx: _Ctx, pat: PathPattern, hint: dict) -> tuple:
     prev = var0
     node_vars = [var0]            # traversal order, for named paths
     rel_info: list[tuple] = []    # (rvar, is_varlength)
+    # an inline {props} filter so far narrows the frame's ids; without
+    # one they are a whole label (or every vertex), and seeding from them
+    # would only add a semi-join of the full edge set
+    anchored = items[0].props is not None
 
     for i in range(1, len(items), 2):
         rel: RelPattern = items[i]
@@ -667,7 +676,10 @@ def _compile_path(ctx: _Ctx, pat: PathPattern, hint: dict) -> tuple:
             from rust_graph_db_spark.operators.traversal import expand_paths
 
             edges = ctx.graph.edge_frame(rel.label) if rel.label else ctx.graph.edges()
-            pairs = expand_paths(edges, None, lo, hi, direction=rel.direction)
+            # seed with the left end's ids: the join below keeps only
+            # those starts, so expanding from any other vertex is waste
+            seed = df.select(_flat(prev, "id")) if anchored else None
+            pairs = expand_paths(edges, seed, lo, hi, direction=rel.direction)
             pdf = pairs.select(
                 F.col("a").alias(_flat(rvar, "_FROM")),
                 F.col("b").alias(_flat(rvar, "_TO")),
@@ -684,6 +696,7 @@ def _compile_path(ctx: _Ctx, pat: PathPattern, hint: dict) -> tuple:
             pdf, rb = _edge_df(ctx, rvar, rel.label, rel.direction)
             pdf = _inline_filter(ctx, pdf, rb, rel.props)
             df = df.join(pdf, F.col(_flat(prev, "id")) == F.col(_flat(rvar, "_FROM")))
+            anchored = anchored or rel.props is not None
         env_add[rvar] = rb
         rel_info.append((rvar, rel.var_length is not None))
 
@@ -699,6 +712,7 @@ def _compile_path(ctx: _Ctx, pat: PathPattern, hint: dict) -> tuple:
             nvar, ndf, nb = node_frame(node)
             df = df.join(ndf, F.col(_flat(rvar, "_TO")) == F.col(_flat(nvar, "id")))
             env_add[nvar] = nb
+            anchored = anchored or node.props is not None
         prev = nvar
         node_vars.append(nvar)
 

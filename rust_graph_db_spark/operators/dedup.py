@@ -1228,9 +1228,9 @@ def _char_hist(col: str, n: int = _HIST_BUCKETS) -> Column:
     One interpreted pass over the chars (codepoints -> buckets once,
     then one fold that rebuilds the small accumulator array;
     higher-order lambdas are interpreted, so pass count dominates — a
-    per-bucket filter(split(...)) form measured ~20x slower per doc;
-    a 4-long bit-packed variant made the per-PAIR compare 8x slower,
-    so plain ints it is).
+    per-bucket filter(split(...)) form measured ~20x slower per doc).
+    ``split(s, '')`` splits on code points and ``ascii`` returns the
+    code point, so non-ASCII text counts one bucket hit per character.
     """
     return F.expr(
         f"aggregate(transform(split({col}, ''), ch -> pmod(ascii(ch), {n})), "
@@ -1248,9 +1248,9 @@ def _hist_prune(cands: DataFrame, hists: DataFrame, d: int) -> DataFrame:
     true pair is ever pruned, so the verified output is unchanged —
     this exists purely so the O(d·l) banded levenshtein (and the text
     join feeding it) runs on ~10x fewer pairs (guide §8: decide with
-    small rows — 32 bytes — before moving the heavy text bytes).
-    Saturation at 255 is a per-bucket contraction too
-    (|min(a,255)-min(b,255)| <= |a-b|), so packing keeps the bound.
+    small rows — 32 ints — before moving the heavy text bytes).
+    ``hists._h`` must be the unpacked int array of ``_char_hist``: the
+    L1 is a per-element ``zip_with`` over the buckets.
     Empty-string edge: split('','') yields [''] (one phantom bucket-0
     count); a true pair with an empty side has lev = l_other ≤ d, so
     measured L1 ≤ l_other + 1 ≤ d + 1 ≤ 2d for d ≥ 1, and at d = 0
@@ -1422,7 +1422,7 @@ def edit_distance_pairs(df: DataFrame, id_col: str = "doc_id",
     # per-doc fold otherwise runs on however few partitions the doc
     # scan produced. pinned: feeds both sides of the pair join
     hists = (spread(base.select("id", "s"))
-             .select("id", _char_hist_packed("s").alias("_h"))
+             .select("id", _char_hist("s").alias("_h"))
              .localCheckpoint(eager=True))
     cands = _hist_prune(cands, hists, d)
     s1 = base.select(F.col("id").alias("id1"), F.col("s").alias("s1"))
@@ -1560,7 +1560,7 @@ def blocked_edit_distance_pairs(df: DataFrame, id_col: str = "doc_id",
     # necessary-only bound, output unchanged); same ~10x verify-volume
     # cut as d17. spread + pin as in d17 (≥2 consumers)
     hists = (spread(base.select("id", "s"))
-             .select("id", _char_hist_packed("s").alias("_h"))
+             .select("id", _char_hist("s").alias("_h"))
              .localCheckpoint(eager=True))
     cands = _hist_prune(cands, hists, d)
     s1 = base.select(F.col("id").alias("id1"), F.col("s").alias("s1"))

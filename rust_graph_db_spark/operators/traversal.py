@@ -335,12 +335,23 @@ def expand_paths(
     ARRAY<LONG>)``. ``epath`` carries the traversed EDGE ids (the
     reference GraphPath's edge list, path.rs:23-40) when the input has
     an ``id`` column — Cypher named paths read ``relationships(p)``
-    from it; for bare (src, dst) frames it is NULL. ``start`` is
-    None (expand from every vertex — used by the Cypher compiler for
-    ``[:R*min..max]``), an id list, or a one-column DataFrame.
-    Cycle-freedom = no repeated vertex (reference default), enforced with
-    ``array_contains`` on the riding path column. ``max_paths`` caps
-    enumeration *per level* inside the loop (vle.rs:124-127).
+    from it; for bare (src, dst) frames it is NULL. ``start`` is an id
+    list or a one-column DataFrame of start ids (the Cypher compiler
+    passes the left end's ids when an inline property filter anchors
+    the path so far); ``None`` expands from every vertex.
+    Cycle-freedom = no repeated vertex (reference default), enforced
+    with ``array_contains`` on the riding path column. ``max_paths`` caps enumeration *per level* inside the
+    loop (vle.rs:124-127).
+
+    The frontier starts from the seed, never from the whole edge set:
+    level 1 is the edge scan left-semi-joined to the start ids, so a
+    duplicated start id cannot duplicate paths, and for a DataFrame
+    seed AQE picks broadcast or shuffle by the seed's size. The edge
+    input is not pinned (it is a scan, re-read per level); each
+    intermediate level is pinned once and probed for emptiness, and the
+    last level stays lazy — nothing reads it before the final union —
+    unless ``max_paths`` caps it: a capped level is always pinned, so
+    every action on the result sees the same capped subset.
     """
     has_eid = "id" in edges.columns
     e = edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
@@ -356,21 +367,24 @@ def expand_paths(
         hop = fwd.unionAll(rev)
     else:
         raise ValueError(f"bad direction {direction!r}")
-    hop = hop.localCheckpoint(eager=True)
     epath0 = (F.array("eid") if has_eid
               else F.lit(None).cast("array<long>")).alias("epath")
-    paths = hop.select(
+    first = hop
+    if start is not None:
+        sf = _start_frame(edges, start).select(F.col("id").alias("a"))
+        if not isinstance(start, DataFrame):
+            sf = F.broadcast(sf)        # an in-memory id list is tiny
+        first = first.join(sf, "a", "left_semi")
+    paths = first.select(
         F.col("a"), F.col("b"), F.lit(1).alias("hops"),
         F.array("a", "b").alias("vpath"), epath0,
     )
-    if start is not None:
-        sf = _start_frame(edges, start).select(F.col("id").alias("a"))
-        paths = paths.join(F.broadcast(sf), "a")
     if not allow_cycles:
         paths = paths.where(F.col("a") != F.col("b"))
     if max_paths is not None:
         paths = paths.limit(max_paths)
-    paths = paths.localCheckpoint(eager=True)
+    if max_hops > 1 or max_paths is not None:
+        paths = paths.localCheckpoint(eager=True)
 
     out = [paths] if min_hops <= 1 else []
     cur = paths
@@ -392,8 +406,9 @@ def expand_paths(
         )
         if max_paths is not None:
             ext = ext.limit(max_paths)
-        ext = ext.localCheckpoint(eager=True)
-        if ext.isEmpty():
+        if level < max_hops or max_paths is not None:
+            ext = ext.localCheckpoint(eager=True)
+        if level < max_hops and ext.isEmpty():
             break
         if level >= min_hops:
             out.append(ext)

@@ -23,13 +23,16 @@ from __future__ import annotations
 
 import hashlib
 import math
+import os
 import sys
 
 import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# measure the tree this script sits in, never an installed or other copy
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
@@ -113,7 +116,7 @@ def main() -> None:
 
     import importlib.util
     spec = importlib.util.spec_from_file_location(
-        "entry", "/root/repo/__spark_entry__.py")
+        "entry", os.path.join(ROOT, "__spark_entry__.py"))
     entry = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entry)
 
@@ -130,7 +133,6 @@ def main() -> None:
     qs = entry.queries()
     oracles = entry.oracle_sql()
     failures = []
-    import os
     import re as _re
 
     # Strict parse: the LAST path component must be exactly sf<number>

@@ -1132,3 +1132,142 @@ def test_proc_link_predict(kg):
         "CALL algo.linkPredict('KNOWS') YIELD u, v, cn, jac, pa "
         "RETURN count(*) AS n, min(cn) AS mncn, max(jac) AS mxj").first()
     assert r.n > 0 and r.mncn >= 1 and 0.0 < r.mxj <= 1.0
+
+
+# ---------------------------------------------------- seeded var-length
+
+
+def _walk_sql(lo: int, hi: int, direction: str) -> str:
+    """DuckDB subquery ``(a, b, hops)`` over every simple ``*lo..hi``
+    walk of the knows graph, traversing edges out, in or both ways."""
+    out = "SELECT src AS s, dst AS d FROM knows"
+    inn = "SELECT dst AS s, src AS d FROM knows"
+    e = {"out": out, "in": inn, "both": f"{out} UNION ALL {inn}"}[direction]
+    return (
+        f"(WITH RECURSIVE e AS ({e}), walk AS ("
+        "SELECT s AS a, d AS b, 1 AS hops, [s, d] AS vp FROM e WHERE s <> d "
+        "UNION ALL SELECT w.a, e.d, w.hops + 1, list_append(w.vp, e.d) "
+        "FROM walk w JOIN e ON w.b = e.s "
+        f"WHERE w.hops < {hi} AND NOT list_contains(w.vp, e.d)) "
+        f"SELECT a, b, hops FROM walk WHERE hops >= {lo})")
+
+
+@pytest.mark.parametrize("arrow,direction,lo,hi", [
+    ("-[r:KNOWS*1..2]->", "out", 1, 2),
+    ("<-[r:KNOWS*1..2]-", "in", 1, 2),
+    ("-[r:KNOWS*1..2]-", "both", 1, 2),
+    ("-[r:KNOWS*2..3]->", "out", 2, 3),
+])
+def test_vle_seeded_directions(kg, oracle, arrow, direction, lo, hi):
+    """The expansion starts from the inline-filtered start vertices; every
+    direction and a min_hops > 1 range keep the full-walk semantics."""
+    oracle(
+        kg.cypher(f"MATCH (a:Person {{age: 25}}){arrow}(b:Person) "
+                  "RETURN a.name AS an, b.name AS bn, length(r) AS h"),
+        f"SELECT p1.name, p2.name, t.hops FROM {_walk_sql(lo, hi, direction)}"
+        " t JOIN person p1 ON t.a = p1.key JOIN person p2 ON t.b = p2.key "
+        "WHERE p1.age = 25")
+
+
+def test_vle_start_bound_by_earlier_match(kg, oracle):
+    """A start bound by an earlier clause, plain or behind LIMIT, keeps
+    the full-walk semantics of the expansion."""
+    walk = _walk_sql(1, 2, "out")
+    oracle(
+        kg.cypher("MATCH (a:Person) WHERE a.age = 25 "
+                  "MATCH (a)-[r:KNOWS*1..2]->(b:Person) "
+                  "RETURN a.name AS an, b.name AS bn, length(r) AS h"),
+        f"SELECT p1.name, p2.name, t.hops FROM {walk} t "
+        "JOIN person p1 ON t.a = p1.key JOIN person p2 ON t.b = p2.key "
+        "WHERE p1.age = 25")
+    oracle(
+        kg.cypher("MATCH (a:Person) WITH a ORDER BY a.name LIMIT 3 "
+                  "MATCH (a)-[:KNOWS*1..2]->(b:Person) "
+                  "RETURN a.name AS an, b.name AS bn"),
+        f"SELECT p1.name, p2.name FROM {walk} t "
+        "JOIN (SELECT * FROM person ORDER BY name LIMIT 3) p1 "
+        "ON t.a = p1.key JOIN person p2 ON t.b = p2.key")
+
+
+def test_vle_seeds_only_an_anchored_start(kg):
+    """An inline {props} filter on the path so far seeds the expansion (a
+    left-semi join of the edges); a bare label scan does not, since its
+    ids are the whole label and the seed would only cost a join."""
+    def plan(q):
+        return kg.cypher(q)._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "LeftSemi" in plan(
+        "MATCH (a:Person {age: 25})-[:KNOWS*1..1]->(b) RETURN b.name")
+    assert "LeftSemi" in plan(
+        "MATCH (a:Person {age: 25})-[:KNOWS]->(m)-[:KNOWS*1..1]->(b) "
+        "RETURN b.name")
+    assert "LeftSemi" not in plan(
+        "MATCH (a:Person)-[:KNOWS*1..1]->(b) RETURN b.name")
+    assert "LeftSemi" not in plan(
+        "MATCH (a:Person) WHERE a.age = 25 "
+        "MATCH (a)-[:KNOWS*1..1]->(b) RETURN b.name")
+
+
+@pytest.fixture(scope="module")
+def dag_graph(spark):
+    """A→B, A→C, B→D, B→E, C→E: A has no in-edges, D and E no out-edges."""
+    from rust_graph_db_spark import PropertyGraph
+
+    g = PropertyGraph(spark)
+    g.cypher("CREATE (a:P {name:'A'})-[:K]->(b:P {name:'B'}), "
+             "(a)-[:K]->(c:P {name:'C'}), (b)-[:K]->(d:P {name:'D'}), "
+             "(b)-[:K]->(e:P {name:'E'}), (c)-[:K]->(e)").collect()
+    return g
+
+
+def test_optional_match_unmatched_entity_is_null(dag_graph):
+    """An unmatched OPTIONAL MATCH variable is NULL, not a struct of
+    nulls: count(b) skips it and b IS NULL holds."""
+    r = dag_graph.cypher(
+        "MATCH (a:P {name:'A'}) OPTIONAL MATCH (a)<-[:K]-(b:P) "
+        "RETURN count(b) AS c, b IS NULL AS isnull, b AS b").first()
+    assert (r.c, r.isnull, r.b) == (0, True, None)
+    r = dag_graph.cypher(
+        "MATCH (a:P {name:'B'}) OPTIONAL MATCH (a)<-[:K]-(b:P) "
+        "RETURN count(b) AS c, b IS NULL AS isnull").first()
+    assert (r.c, r.isnull) == (1, False)
+
+
+def test_optional_match_vle_without_match(dag_graph):
+    """A seeded expansion that finds nothing leaves the OPTIONAL row with
+    NULL bindings for the segment and its far end."""
+    rows = dag_graph.cypher(
+        "MATCH (a:P) WHERE a.name IN ['B', 'D'] "
+        "OPTIONAL MATCH (a)-[r:K*1..2]->(b:P) "
+        "RETURN a.name AS an, count(b) AS cb, count(r) AS cr "
+        "ORDER BY an").collect()
+    assert [tuple(x) for x in rows] == [("B", 2, 2), ("D", 0, 0)]
+    r = dag_graph.cypher(
+        "MATCH (a:P {name:'E'}) OPTIONAL MATCH (a)-[r:K*2..3]-(b:P) "
+        "WHERE b.name = 'nobody' RETURN a.name AS an, b IS NULL AS bn, "
+        "r IS NULL AS rn").first()
+    assert (r.an, r.bn, r.rn) == ("E", True, True)
+
+
+def test_named_and_shortest_path_over_seeded_segment(kg, oracle):
+    """Named paths and shortestPath read vpath/epath of a seeded
+    segment; a start bound by an earlier MATCH gives the same paths as
+    the inline-filtered start."""
+    def paths(q):
+        return sorted((tuple(r.ns), tuple(r.rs)) for r in kg.cypher(q).collect())
+
+    inline = paths("MATCH p = (a:Person {name:'Person0'})-[:KNOWS*1..3]->(b) "
+                   "RETURN nodes(p) AS ns, relationships(p) AS rs")
+    bound = paths("MATCH (a:Person {name:'Person0'}) "
+                  "MATCH p = (a)-[:KNOWS*1..3]->(b) "
+                  "RETURN nodes(p) AS ns, relationships(p) AS rs")
+    assert inline and bound == inline
+    assert all(len(ns) == len(rs) + 1 for ns, rs in bound)
+    walk = _walk_sql(1, 4, "out")
+    oracle(
+        kg.cypher("MATCH (a:Person {name:'Person0'}) "
+                  "MATCH p = shortestPath((a)-[:KNOWS*1..4]->(b:Person)) "
+                  "RETURN b.name AS bn, length(p) AS d"),
+        f"SELECT p2.name, min(t.hops) FROM {walk} t "
+        "JOIN person p1 ON t.a = p1.key JOIN person p2 ON t.b = p2.key "
+        "WHERE p1.name = 'Person0' GROUP BY p2.name")

@@ -2153,6 +2153,32 @@ def test_edit_distance_pairs_empty(spark):
     assert edit_distance_pairs(df).count() == 0
 
 
+def test_hist_prune_never_drops_a_true_pair(spark):
+    """The char-histogram count filter is a NECESSARY condition for
+    Levenshtein <= d: every pair within d survives, at every d including
+    0, on empty strings and on non-ASCII text (accents, CJK, an emoji
+    outside the BMP, a bucket collision 'a' vs U+00E1 at n=32)."""
+    from rust_graph_db_spark.operators.dedup import _char_hist, _hist_prune
+
+    texts = ["", "a", "ab", "ba", "abc", "café", "cafe", "cafè", "日本語",
+             "日本", "本日語", "x\U0001F600y", "x\U0001F601y", "xy",
+             "á", "\u00e1b", "aab", "abb"]
+    rows = list(enumerate(texts))
+    hists = (spark.createDataFrame(rows, "id LONG, s STRING")
+             .select("id", _char_hist("s").alias("_h")))
+    cands = spark.createDataFrame(
+        [(i, j) for i in range(len(texts)) for j in range(i + 1, len(texts))],
+        "id1 LONG, id2 LONG")
+    for d in (0, 1, 2):
+        kept = {(r.id1, r.id2) for r in _hist_prune(cands, hists, d).collect()}
+        true = {(i, j) for i, a in rows for j, b in rows
+                if i < j and _lev(a, b) <= d}
+        assert true <= kept, (d, sorted(true - kept))
+        if d == 0:
+            # anagrams share a histogram; different multisets are pruned
+            assert (1, 2) not in kept and (2, 3) in kept
+
+
 def test_blocked_edit_distance_banded_matches_bruteforce(spark):
     """Banded mode = exact recall: equality with the naive definition
     on a corpus that straddles the pigeonhole threshold T (d=2, k=2 →

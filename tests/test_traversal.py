@@ -116,3 +116,72 @@ def test_weighted_sssp_negative_weights_take_distributed_path(spark):
     got = {r.id: r.dist for r in
            T.weighted_shortest_distances(e, [0]).collect()}
     assert got[1] == 1.0 and got[3] == 2.0
+
+
+def _vpaths(df):
+    return sorted(tuple(r.vpath) for r in df.collect())
+
+
+def test_vle_directions_and_min_hops(dag):
+    assert _vpaths(T.expand_paths(dag, [5], 1, 2, direction="in")) == [
+        (5, 2), (5, 2, 1), (5, 3), (5, 3, 1)]
+    assert _vpaths(T.expand_paths(dag, [4], 1, 2, direction="both")) == [
+        (4, 2), (4, 2, 1), (4, 2, 5)]
+    # min_hops > 1, and a last level (3 hops) that is empty
+    assert _vpaths(T.expand_paths(dag, [1], 2, 3)) == [
+        (1, 2, 4), (1, 2, 5), (1, 3, 5)]
+
+
+def test_vle_duplicate_starts_yield_each_path_once(dag):
+    assert _vpaths(T.expand_paths(dag, [1, 1], 1, 2)) == _vpaths(
+        T.expand_paths(dag, [1], 1, 2))
+
+
+@pytest.mark.parametrize("direction", ["out", "in", "both"])
+def test_vle_seeded_matches_unseeded(spark, direction):
+    """A DataFrame seed returns exactly the unseeded expansion's paths
+    from those starts, edge ids included."""
+    edges = spark.createDataFrame(
+        [(10 + i, s, d) for i, (s, d) in enumerate(EDGES + [(4, 1), (5, 5)])],
+        "id LONG, src LONG, dst LONG")
+    seed = spark.createDataFrame([(1,), (4,), (4,), (9,)], "v LONG")
+
+    def rows(df):
+        return sorted((r.a, r.b, r.hops, tuple(r.vpath), tuple(r.epath))
+                      for r in df.collect())
+
+    for lo, hi in [(1, 1), (1, 3), (2, 4)]:
+        got = T.expand_paths(edges, seed, lo, hi, direction=direction)
+        ref = T.expand_paths(edges, None, lo, hi, direction=direction)
+        assert rows(got) == rows(ref.where(F.col("a").isin(1, 4))), (lo, hi)
+
+
+def test_max_paths_caps_each_level_when_seeded(dag):
+    # both 1-hop paths from vertex 1 extend once more, and no 3-hop path
+    # exists, so whichever path each capped level keeps the counts hold
+    per_level = {r.hops: r["count"] for r in T.expand_paths(
+        dag, [1], 1, 3, max_paths=1).groupBy("hops").count().collect()}
+    assert per_level == {1: 1, 2: 1}
+    # a capped last level is pinned: every action sees the same subset
+    for hi in (1, 2):
+        capped = T.expand_paths(dag, [1], 1, hi, max_paths=1)
+        assert _vpaths(capped) == _vpaths(capped)
+
+
+def test_vle_build_runs_one_job_per_pinned_level(spark, dag):
+    """Building a *1..2 expansion pins level 1 only (the seed broadcast
+    and the pin itself): no edge-set pin, and the last level is neither
+    pinned nor probed; *1..1 runs no job at all."""
+    sc = spark.sparkContext
+
+    def build_jobs(lo, hi):
+        group = f"vle-build-{lo}-{hi}"
+        sc.setJobGroup(group, group)
+        try:
+            T.expand_paths(dag, [1], lo, hi)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert build_jobs(1, 1) == 0
+    assert build_jobs(1, 2) <= 2
