@@ -1598,7 +1598,7 @@ def keep_best_per_cluster(docs: DataFrame, pairs: DataFrame,
     non-transitive). This operator is the policy used when a cluster
     is trusted to be one logical document.
 
-    100 TB shape: clustering is the existing co-partitioned CC loop;
+    100 TB shape: clustering is the ``connected_components`` star loop;
     selection adds ONE map-side-combinable ``max(struct(score, -id))``
     aggregate and ONE equi-join back on the cluster id — deliberately
     NO per-cluster window sort, so a pathological mega-cluster (the

@@ -15,11 +15,12 @@ the whole-graph analytics a training-data pipeline needs:
 Scale notes: components uses the large-star/small-star algorithm
 (Kiveris et al., "Connected Components in MapReduce and Beyond",
 SoCC'14) — O(log² n) rounds, each round two self-joins + a min-agg, no
-driver-side state beyond the convergence counter. PageRank keeps ranks
-and links as two DataFrames joined per iteration with
-``localCheckpoint`` lineage truncation; at cluster scale both sides
-should be co-partitioned on vertex id so the per-iteration join is
-shuffle-free on the link side.
+driver-side state beyond the convergence probe. PageRank keeps ranks
+and links as two DataFrames hash-partitioned once on vertex id, so the
+per-iteration join is shuffle-free on the link side. The PageRank,
+label-propagation, k-core, k-truss and components loops all run on the
+``pregel.supersteps`` kernel: one pin per superstep group, with the
+halting count observed inside the pinning job.
 """
 
 from __future__ import annotations
@@ -28,6 +29,8 @@ from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from rust_graph_db_spark.operators.pregel import pin, supersteps
 
 
 def _pair_cols(edges: DataFrame) -> tuple:
@@ -100,14 +103,17 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
     converge in the same handful of rounds as star-shaped ones. Each
     round is two groupBy-mins + two joins on the current pair set.
     Isolated vertices of the edge list don't exist by construction
-    (callers union in their full vertex set if needed).
+    (callers union in their full vertex set if needed). Raises
+    ``RuntimeError`` when the star rounds reach no fixpoint within
+    ``max_iter``: a partial pair set is not a component labeling.
     """
     s, d = _pair_cols(edges)
-    e = (edges.select(F.col(s).cast("long").alias("u"),
-                      F.col(d).cast("long").alias("v"))
-         .where(F.col("u").isNotNull() & F.col("v").isNotNull())
-         .localCheckpoint(eager=True))
-    if e.count() <= driver_threshold:
+    e, (n_edges,) = pin(
+        edges.select(F.col(s).cast("long").alias("u"),
+                     F.col(d).cast("long").alias("v"))
+        .where(F.col("u").isNotNull() & F.col("v").isNotNull()),
+        n=F.count(F.lit(1)))
+    if n_edges <= driver_threshold:
         # Union-find tolerates duplicate and reversed pairs, so the raw
         # checkpointed edge list collects directly — no symmetrize /
         # distinct shuffle on the driver path.
@@ -134,23 +140,19 @@ def connected_components(edges: DataFrame, max_iter: int = 25,
         return edges.sparkSession.createDataFrame(
             out or [], "id LONG, component LONG")
     # distributed path: alternating star rounds on the de-duplicated,
-    # self-loop-free pair set (e is already checkpointed above — the
-    # rounds re-pin per iteration, no second checkpoint of the input)
-    pairs = e.where(F.col("u") != F.col("v")).distinct() \
-             .localCheckpoint(eager=True)
-    prev = None
-    for _ in range(max_iter):
-        pairs = _small_star(_large_star(pairs)).localCheckpoint(eager=True)
-        # converged when the pair set is fixed; (count, order-free hash
-        # sum) is a one-scan probe on the just-checkpointed frame
-        cur = tuple(pairs.agg(
-            F.count(F.lit(1)),
-            # decimal accumulator: a long sum of 64-bit hashes overflows
-            # under ANSI mode
-            F.sum(F.xxhash64("u", "v").cast("decimal(38,0)"))).first())
-        if cur == prev:
-            break
-        prev = cur
+    # self-loop-free pair set; converged when the pair set is fixed,
+    # probed as (count, order-free hash sum) — the hash sum needs a
+    # decimal accumulator (a long sum of 64-bit hashes overflows under
+    # ANSI mode)
+    pairs, converged = supersteps(
+        e.where(F.col("u") != F.col("v")).distinct(),
+        lambda p: _small_star(_large_star(p)), int(max_iter),
+        probe={"n": F.count(F.lit(1)),
+               "h": F.sum(F.xxhash64("u", "v").cast("decimal(38,0)"))})
+    if not converged:
+        # the projection below is only valid on the star-forest fixpoint
+        raise RuntimeError(
+            f"connected_components: not converged within max_iter={max_iter}")
     # fixed point is a star forest oriented (member, root): roots appear
     # only on the right, every non-root exactly once on the left
     return (pairs.select(F.col("u").alias("id"), F.col("v").alias("component"))
@@ -290,23 +292,32 @@ def degrees(edges: DataFrame) -> DataFrame:
             .withColumn("deg", F.col("out_deg") + F.col("in_deg")))
 
 
-# Co-partitioned mode is the default at EVERY size: paired warm trials
-# at sf0.1 (16.5k edges, 8 iterations) measured it ~25% faster than the
-# AQE-on/auto-broadcast plain loop even on tiny graphs — per-iteration
+# The PageRank family runs co-partitioned at EVERY size: paired warm
+# trials at sf0.1 (16.5k edges, 8 iterations) measured it ~25% faster
+# than an AQE-on/auto-broadcast loop even on tiny graphs — per-iteration
 # adaptive re-planning and broadcast rebuilds cost more than a pinned
-# single-partition pipeline. ``copartition=False`` remains as an
-# explicit opt-out (and keeps the parity test honest).
+# single-partition pipeline.
 
 
-def _pr_frames(e: DataFrame, nparts: Optional[int],
+def _pr_frames(e: DataFrame, nparts: int, sources=(),
                weighted: bool = False) -> tuple:
-    """(verts, links) for the PageRank loop, optionally pinned to a
-    shared HashPartitioning on vertex id (``localCheckpoint`` captures
-    the layout in the LogicalRDD, so every iteration reuses it).
-    ``weighted`` links carry (dst, w) structs + the out-weight total."""
-    verts = (e.select(F.col("src").alias("id"))
-             .unionAll(e.select(F.col("dst").alias("id")))
-             .distinct())
+    """(verts, links) for the PageRank loop, pinned to a shared
+    HashPartitioning on vertex id (``localCheckpoint`` captures the
+    layout in the LogicalRDD, so every iteration reuses it). ``verts``
+    carries each vertex's teleport share ``reset``: 1.0 for plain
+    PageRank, uniform over ``sources`` (0 elsewhere) for personalized
+    PageRank. ``weighted`` links carry (dst, w) structs + the
+    out-weight total."""
+    ids = (e.select(F.col("src").alias("id"))
+           .unionAll(e.select(F.col("dst").alias("id"))))
+    if sources:
+        # Sources absent from the edge list (isolated or typo'd ids)
+        # would otherwise silently vanish from the vertex universe —
+        # their teleport mass dropping to zero EVERYWHERE. An isolated
+        # source ranks (1-d)/|S|, the correct PPR fixed point for it.
+        ids = ids.unionAll(e.sparkSession.createDataFrame(
+            [(s,) for s in sources], "id LONG"))
+    verts = ids.distinct().repartition(nparts, F.col("id"))
     if weighted:
         # links drop non-positive-weight edges (they carry no rank and
         # keep tw strictly positive); verts above keep their endpoints
@@ -317,38 +328,42 @@ def _pr_frames(e: DataFrame, nparts: Optional[int],
                       F.sum("w").alias("tw")))
     else:
         links = e.groupBy("src").agg(F.collect_list("dst").alias("nbrs"))
-    if nparts:
-        verts = verts.repartition(nparts, F.col("id"))
-        links = links.repartition(nparts, F.col("src"))
-    return (verts.localCheckpoint(eager=True),
+    links = links.repartition(nparts, F.col("src"))
+    reset = (F.when(F.col("id").isin(list(sources)),
+                    F.lit(1.0 / len(sources))).otherwise(F.lit(0.0))
+             if sources else F.lit(1.0))
+    # withColumn after the checkpoint is a narrow projection — the
+    # pinned HashPartitioning survives, so the loop's join side stays
+    # Exchange-free
+    return (verts.localCheckpoint(eager=True).withColumn("reset", reset),
             links.localCheckpoint(eager=True))
 
 
 def _pr_step(verts: DataFrame, links: DataFrame, r: DataFrame,
              damping: float, weighted: bool = False) -> DataFrame:
-    """One damped-PageRank iteration (pure plan — no action)."""
+    """One PageRank superstep (pure plan — no action):
+    rank = (1-d)·reset + d·Σ_in contribution, a contribution being
+    rank/out_deg, or rank·w/(out-weight total) when ``weighted``."""
     if weighted:
         contribs = (links.join(r, links["src"] == r["id"])
                     .select(F.explode("nbrs").alias("nb"),
                             (F.col("rank") / F.col("tw")).alias("rpw"))
                     .select(F.col("nb.d").alias("id"),
-                            (F.col("rpw") * F.col("nb.w")).alias("c"))
-                    .groupBy("id").agg(F.sum("c").alias("c")))
+                            (F.col("rpw") * F.col("nb.w")).alias("c")))
     else:
         contribs = (links.join(r, links["src"] == r["id"])
                     .select(F.explode("nbrs").alias("id"),
-                            (F.col("rank") / F.size("nbrs")).alias("c"))
-                    .groupBy("id").agg(F.sum("c").alias("c")))
+                            (F.col("rank") / F.size("nbrs")).alias("c")))
+    contribs = contribs.groupBy("id").agg(F.sum("c").alias("c"))
     return (verts.join(contribs, "id", "left")
             .select("id",
-                    (F.lit(1.0 - damping)
+                    (F.lit(1.0 - damping) * F.col("reset")
                      + F.lit(damping) * F.coalesce("c", F.lit(0.0))
                      ).alias("rank")))
 
 
 def pagerank(edges: DataFrame, iterations: int = 10,
              damping: float = 0.85,
-             copartition: Optional[bool] = None,
              weight_col: Optional[str] = None) -> DataFrame:
     """Classic damped PageRank over a (src, dst) edge list.
 
@@ -356,37 +371,30 @@ def pagerank(edges: DataFrame, iterations: int = 10,
     d * sum(in_rank/out_deg); dangling vertices absorb rank — no
     redistribution, so ranks sum to n only on dangling-free graphs).
     Fixed iteration count — deterministic, driver controls convergence.
+    ``weight_col`` weighs each out-link by w / (out-weight total).
 
-    Shuffle discipline: CO-PARTITIONED by default at every size
-    (measured faster than the AQE/auto-broadcast plain loop even at
-    16.5k edges — see the comment above ``_pr_frames``; pass
-    ``copartition=False`` to opt out). ``links`` and ``verts`` are
-    hash-partitioned on vertex id
-    ONCE before the loop (``localCheckpoint`` pins the layout —
-    LogicalRDD preserves outputPartitioning), every downstream frame
-    inherits a compatible HashPartitioning, and each iteration pays
-    exactly ONE Exchange (the contribution re-key under the groupBy)
-    instead of re-shuffling the static link table every round — at
-    100 TB the link table is the big side and re-shuffling it would
-    dominate the algorithm (plan-asserted in
-    tests/test_graph_algos.py). AQE is disabled inside co-partitioned
-    mode only: under AQE a checkpointed frame's outputPartitioning is
-    Unknown (the adaptive plan's final layout isn't knowable when the
-    LogicalRDD is captured), which would silently re-insert BOTH
-    per-iteration exchanges; the explicit partition sizing (one
-    partition per ~250k edges, capped at the session's shuffle
-    parallelism) does the work AQE's coalescing otherwise would.
+    Shuffle discipline: ``links`` and ``verts`` are hash-partitioned
+    on vertex id ONCE before the loop (``localCheckpoint`` pins the
+    layout — LogicalRDD preserves outputPartitioning), every
+    downstream frame inherits a compatible HashPartitioning, and each
+    iteration pays exactly ONE Exchange (the contribution re-key under
+    the groupBy) instead of re-shuffling the static link table every
+    round — at 100 TB the link table is the big side and re-shuffling
+    it would dominate the algorithm (plan-asserted in
+    tests/test_graph_algos.py). AQE is disabled for the loop: under
+    AQE a checkpointed frame's outputPartitioning is Unknown (the
+    adaptive plan's final layout isn't knowable when the LogicalRDD is
+    captured), which would silently re-insert BOTH per-iteration
+    exchanges; the explicit partition sizing (one partition per ~250k
+    edges, capped at the session's shuffle parallelism) does the work
+    AQE's coalescing otherwise would.
     """
-    return _pr_run(edges, copartition,
-                   lambda e, np: _pagerank_loop(
-                       e, np, iterations, damping,
-                       weighted=weight_col is not None),
-                   weight_col=weight_col)
+    return _pr_run(edges, iterations, damping, weight_col=weight_col)
 
 
 def personalized_pagerank(edges: DataFrame, sources,
-                          iterations: int = 10, damping: float = 0.85,
-                          copartition: Optional[bool] = None) -> DataFrame:
+                          iterations: int = 10,
+                          damping: float = 0.85) -> DataFrame:
     """Personalized PageRank: the teleport vector is uniform over the
     SOURCE set instead of all vertices, so rank_v scores proximity to
     the sources — the standard recommendation / local-community /
@@ -398,49 +406,43 @@ def personalized_pagerank(edges: DataFrame, sources,
     absorb mass, matching ``pagerank``'s convention. Fixed iteration
     count — deterministic.
 
-    Shares ``pagerank``'s scale discipline via ``_pr_run``: the same
-    co-partitioned one-Exchange-per-iteration loop above the edge
-    threshold. ``sources`` ships in the plan as an ``isin`` literal
-    list — the personalized query shape has small |S| (a user, a
-    session's entities); for set-valued sources at scale, join a
-    reset frame instead.
+    Runs ``pagerank``'s superstep and shuffle discipline with a
+    per-vertex teleport share instead of 1.0. ``sources`` ships in the
+    plan as an ``isin`` literal list — the personalized query shape
+    has small |S| (a user, a session's entities); for set-valued
+    sources at scale, join a reset frame instead.
     """
     if not isinstance(sources, (list, tuple, set, frozenset)):
         sources = [sources]
     src = sorted({int(x) for x in sources})
     if not src:
         raise ValueError("personalized_pagerank needs >= 1 source vertex")
-    return _pr_run(edges, copartition,
-                   lambda e, np: _ppr_loop(e, np, src, iterations, damping))
+    return _pr_run(edges, iterations, damping, sources=src)
 
 
-def _pr_run(edges: DataFrame, copartition: Optional[bool], loop,
-            weight_col: Optional[str] = None) -> DataFrame:
-    """Shared scaffold for the PageRank-family loops: normalize the
-    edge list, pick plain vs co-partitioned mode on edge count, and in
-    co-partitioned mode pin AQE off + shuffle.partitions == nparts for
-    the loop's duration (see ``pagerank``'s docstring for why)."""
+def _pr_run(edges: DataFrame, iterations: int, damping: float,
+            weight_col: Optional[str] = None, sources=()) -> DataFrame:
+    """Shared scaffold of the PageRank family: normalize the edge list
+    to (src, dst[, w]), size the partitioning on the edge count, pin AQE
+    off + shuffle.partitions == nparts for the loop's duration (see
+    ``pagerank``'s docstring for why) and run the supersteps."""
     s, d = _pair_cols(edges)
     spark = edges.sparkSession
+    weighted = weight_col is not None
     cols = [F.col(s).cast("long").alias("src"),
             F.col(d).cast("long").alias("dst")]
-    if weight_col is not None:
-        cols.append(F.col(weight_col).cast("double").alias("w"))
-    e = edges.select(*cols) \
-             .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    if weight_col is not None:
+    if weighted:
         # zero/negative/null weights carry no rank, but their ENDPOINTS
         # stay in the vertex universe (r3 ADVICE: filtering rows here
         # made such vertices vanish from the output entirely, whereas
         # unweighted mode still ranks them (1-d)). _pr_frames drops
         # only the LINKS; normalizing null→0 keeps the filter sargable.
-        e = e.withColumn("w", F.coalesce(F.col("w"), F.lit(0.0)))
-    e = e.localCheckpoint(eager=True)
-    n_edges = e.count()
-    if copartition is None:
-        copartition = True
-    if not copartition:
-        return loop(e, None)
+        cols.append(F.coalesce(F.col(weight_col).cast("double"),
+                               F.lit(0.0)).alias("w"))
+    e, (n_edges,) = pin(
+        edges.select(*cols)
+        .where(F.col("src").isNotNull() & F.col("dst").isNotNull()),
+        n=F.count(F.lit(1)))
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     nparts = max(1, min(cap, -(-n_edges // 250_000)))
     aqe_was = spark.conf.get("spark.sql.adaptive.enabled", "true")
@@ -451,82 +453,17 @@ def _pr_run(edges: DataFrame, copartition: Optional[bool], loop,
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
     try:
-        return loop(e, nparts)
+        verts, links = _pr_frames(e, nparts, sources, weighted)
+        # two lazy steps per pin: the composed 2-iteration plan runs as
+        # one job, halving driver barriers; lineage stays O(1)
+        ranks, _ = supersteps(
+            verts.select("id", F.col("reset").alias("rank")),
+            lambda r: _pr_step(verts, links, r, damping, weighted),
+            int(iterations), per_pin=2)
+        return ranks
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
         spark.conf.set("spark.sql.shuffle.partitions", sp_was)
-
-
-def _pagerank_loop(e: DataFrame, nparts: Optional[int],
-                   iterations: int, damping: float,
-                   weighted: bool = False) -> DataFrame:
-    verts, links = _pr_frames(e, nparts, weighted=weighted)
-    ranks = verts.withColumn("rank", F.lit(1.0))
-    # Two lazy steps per checkpoint: the composed 2-iteration plan runs
-    # as one job, halving driver barriers; lineage stays O(1) via the
-    # per-round checkpoint.
-    done = 0
-    while done < iterations:
-        ranks = _pr_step(verts, links, ranks, damping, weighted=weighted)
-        if done + 1 < iterations:
-            ranks = _pr_step(verts, links, ranks, damping,
-                             weighted=weighted)
-            done += 2
-        else:
-            done += 1
-        ranks = ranks.localCheckpoint(eager=True)
-    return ranks
-
-
-def _ppr_loop(e: DataFrame, nparts: Optional[int], sources: list,
-              iterations: int, damping: float) -> DataFrame:
-    verts, links = _pr_frames(e, nparts)
-    # Sources absent from the edge list (isolated or typo'd ids) would
-    # otherwise silently vanish from the vertex universe — their
-    # teleport mass dropping to zero EVERYWHERE and the caller getting
-    # an all-zero "result" with no error. Union them in explicitly:
-    # an isolated source ranks (1-d)/|S| (it keeps its own teleport
-    # share), which is the correct PPR fixed point for it.
-    spark = e.sparkSession
-    src_df = spark.createDataFrame([(int(s),) for s in sources], "id LONG")
-    missing = src_df.join(verts, "id", "left_anti")
-    if missing.count() > 0:
-        verts = verts.unionByName(missing)
-        if nparts:
-            verts = verts.repartition(nparts, F.col("id"))
-        verts = verts.localCheckpoint(eager=True)
-    # withColumn after the checkpoint is a narrow projection — the
-    # pinned HashPartitioning survives, so the loop's join side stays
-    # Exchange-free in co-partitioned mode, exactly as in _pagerank_loop
-    w = 1.0 / len(sources)
-    verts = verts.withColumn(
-        "reset", F.when(F.col("id").isin(sources), F.lit(w))
-                  .otherwise(F.lit(0.0)))
-    ranks = verts.select("id", F.col("reset").alias("rank"))
-    done = 0
-    while done < iterations:
-        ranks = _ppr_step(verts, links, ranks, damping)
-        if done + 1 < iterations:
-            ranks = _ppr_step(verts, links, ranks, damping)
-            done += 2
-        else:
-            done += 1
-        ranks = ranks.localCheckpoint(eager=True)
-    return ranks.select("id", "rank")
-
-
-def _ppr_step(verts: DataFrame, links: DataFrame, r: DataFrame,
-              damping: float) -> DataFrame:
-    """One personalized-PageRank iteration (pure plan — no action)."""
-    contribs = (links.join(r, links["src"] == r["id"])
-                .select(F.explode("nbrs").alias("id"),
-                        (F.col("rank") / F.size("nbrs")).alias("c"))
-                .groupBy("id").agg(F.sum("c").alias("c")))
-    return (verts.join(contribs, "id", "left")
-            .select("id",
-                    (F.lit(1.0 - damping) * F.col("reset")
-                     + F.lit(damping) * F.coalesce("c", F.lit(0.0))
-                     ).alias("rank")))
 
 
 def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
@@ -551,22 +488,22 @@ def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:
     vertex id — the same discipline as the PageRank loop.
     """
     sym = _undirected_min_nbr(edges)
-    labels = (sym.select(F.col("u").alias("id")).distinct()
-              .withColumn("label", F.col("id"))
-              .localCheckpoint(eager=True))
-    for _ in range(int(iterations)):
-        nbr = (sym.join(labels, sym["v"] == labels["id"])
-               .select("u", "label"))
-        counts = nbr.groupBy("u", "label").agg(
-            F.count(F.lit(1)).alias("c"))
-        labels = (counts
-                  .groupBy("u")
-                  .agg(F.max(F.struct(F.col("c"),
-                                      (-F.col("label")).alias("nl")))
-                       .alias("m"))
-                  .select(F.col("u").alias("id"),
-                          (-F.col("m.nl")).cast("long").alias("label"))
-                  .localCheckpoint(eager=True))
+
+    def step(labels: DataFrame) -> DataFrame:
+        counts = (sym.join(labels, sym["v"] == labels["id"])
+                  .groupBy("u", "label").agg(F.count(F.lit(1)).alias("c")))
+        return (counts
+                .groupBy("u")
+                .agg(F.max(F.struct(F.col("c"),
+                                    (-F.col("label")).alias("nl")))
+                     .alias("m"))
+                .select(F.col("u").alias("id"),
+                        (-F.col("m.nl")).cast("long").alias("label")))
+
+    labels, _ = supersteps(
+        sym.select(F.col("u").alias("id")).distinct()
+        .withColumn("label", F.col("id")),
+        step, int(iterations))
     return labels
 
 
@@ -588,21 +525,22 @@ def k_core(edges: DataFrame, k: int = 3, max_rounds: int = 20) -> DataFrame:
     fixed-unroll oracle match an early-stopping loop). Rounds needed
     ≤ peel depth — in practice a handful; worst case (a path graph
     peeled from the ends, k=2) is O(n), the documented pathological
-    shape, bounded by ``max_rounds``.
+    shape, bounded by ``max_rounds``. An exhausted bound returns the
+    partially-peeled vertex set with its degrees within that set,
+    which may still hold vertices of degree < k (a 51-vertex path at
+    k=2 keeps 45 after 3 rounds); raise ``max_rounds`` if
+    ``min(degree) < k`` in the result — the same bounded-iteration
+    contract as ``k_truss``.
     """
-    cur = _undirected_min_nbr(edges)
-    prev = cur.count()
-    for _ in range(int(max_rounds)):
+    def peel(cur: DataFrame) -> DataFrame:
         keep = (cur.groupBy("u").agg(F.count(F.lit(1)).alias("d"))
                 .where(F.col("d") >= int(k)).select("u"))
-        cur = (cur.join(keep, "u")
-               .join(keep.withColumnRenamed("u", "v"), "v")
-               .select("u", "v")
-               .localCheckpoint(eager=True))
-        cnt = cur.count()
-        if cnt == prev:
-            break
-        prev = cnt
+        return (cur.join(keep, "u")
+                .join(keep.withColumnRenamed("u", "v"), "v")
+                .select("u", "v"))
+
+    cur, _ = supersteps(_undirected_min_nbr(edges), peel, int(max_rounds),
+                        probe={"n": F.count(F.lit(1))})
     return (cur.groupBy(F.col("u").alias("id"))
             .agg(F.count(F.lit(1)).cast("long").alias("degree")))
 
@@ -712,29 +650,23 @@ def k_truss(edges: DataFrame, k: int = 4,
     if int(k) < 2:
         raise ValueError("k_truss: k must be >= 2")
     need = int(k) - 2
-    canon = (_undirected_min_nbr(edges).where(F.col("u") < F.col("v"))
-             .localCheckpoint(eager=True))
-    prev = canon.count()
-    for _ in range(int(max_rounds)):
-        sup = _canon_supports(canon)
-        withs = (canon.join(sup, ["u", "v"], "left")
-                 .select("u", "v",
-                         F.coalesce("support", F.lit(0)).cast("long")
-                         .alias("support"))
-                 .localCheckpoint(eager=True))
-        nxt = withs.where(F.col("support") >= need)
-        cnt = nxt.count()
-        if cnt == prev:
-            # nothing removed: supports were computed on exactly the
-            # surviving set — this IS the k-truss with final supports
-            return nxt.select("u", "v", "support")
-        canon = nxt.select("u", "v").localCheckpoint(eager=True)
-        prev = cnt
-    sup = _canon_supports(canon)
-    return (canon.join(sup, ["u", "v"], "left")
-            .select("u", "v",
-                    F.coalesce("support", F.lit(0)).cast("long")
-                    .alias("support")))
+    def peel(withs: DataFrame) -> DataFrame:
+        canon = withs.where(F.col("support") >= need).select("u", "v")
+        return (canon.join(_canon_supports(canon), ["u", "v"], "left")
+                .select("u", "v",
+                        F.coalesce("support", F.lit(0)).cast("long")
+                        .alias("support")))
+
+    # The probe counts the edges the NEXT peel keeps: equal on two pins
+    # means a round removed nothing, so its supports are final. The
+    # entry's support of k-2 makes the first peel keep every edge,
+    # hence max_rounds + 1 support passes for max_rounds peels.
+    withs, _ = supersteps(
+        _undirected_min_nbr(edges).where(F.col("u") < F.col("v"))
+        .select("u", "v", F.lit(need).cast("long").alias("support")),
+        peel, int(max_rounds) + 1,
+        probe={"kept": F.count_if(F.col("support") >= need)})
+    return withs
 
 
 def link_prediction(edges: DataFrame, min_cn: int = 1) -> DataFrame:

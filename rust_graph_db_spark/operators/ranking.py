@@ -141,8 +141,8 @@ def textrank_keywords(df: DataFrame, text_col: str = "text",
     ``md5_long(word)`` (oracle-replayable, and a 60-bit key keeps the
     iterative join state narrow at 100 TB instead of shuffling word
     strings every round), and the score loop IS
-    ``graph_algos.pagerank(weight_col=...)`` — co-partitioned, one
-    Exchange per iteration, the plan already rehearsed at 10M edges.
+    ``graph_algos.pagerank(weight_col=...)`` — the shared PageRank
+    superstep, one Exchange per iteration on pinned vertex-id layout.
     Scores are independent of id values, so the DuckDB oracle runs the
     SAME unrolled weighted loop keyed by the word string itself.
     Symmetric edges mean no dangling-mass concerns; rank = (1-d) +

@@ -26,6 +26,8 @@ from typing import Iterable, Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rust_graph_db_spark.operators.pregel import pin
+
 
 def _edges(e: DataFrame, direction: str) -> DataFrame:
     """Normalize to (a, b) hop pairs for the requested direction.
@@ -81,8 +83,8 @@ def bfs_distances(
     # Materialize the hop list once — the loop joins it every level, and
     # without pinning, each level re-runs the full upstream derivation
     # (parquet scan + any builder joins). On a cluster this is the
-    # persist() of the Pregel edge RDD.
-    hop = _edges(edges, direction).localCheckpoint(eager=True)
+    # persist() of the Pregel edge RDD. Its size rides in the same job.
+    hop, (n_hop,) = pin(_edges(edges, direction), n=F.count(F.lit(1)))
     src = _start_frame(edges, start)
     # Budget = edges × sources: the driver BFS below runs once per
     # source, so 10 sources over 1M edges costs like 10M — keep the
@@ -94,7 +96,7 @@ def bfs_distances(
     n_starts = src.count()
     starts = []
     if (targets is None and n_starts
-            and hop.count() * n_starts <= driver_threshold):
+            and n_hop * n_starts <= driver_threshold):
         starts = [r["id"] for r in src.collect()]
     if starts:
         from collections import deque
@@ -145,10 +147,11 @@ def bfs_distances(
             cand = n1.unionAll(n2)
         else:
             cand = n1
-        new = (cand.groupBy("start_id", "id").agg(F.min("dist").alias("dist"))
-               .join(visited, ["start_id", "id"], "left_anti")
-               .localCheckpoint(eager=True))
-        if new.isEmpty():
+        new, (n_new,) = pin(
+            cand.groupBy("start_id", "id").agg(F.min("dist").alias("dist"))
+            .join(visited, ["start_id", "id"], "left_anti"),
+            n=F.count(F.lit(1)))
+        if n_new == 0:
             break
         visited = visited.unionAll(new)
         # vertices first seen at the shallow unrolled level were already

@@ -279,6 +279,20 @@ def test_k_core_peels_pendant_chain(spark):
     assert got == {0: 2, 1: 2, 2: 2}
 
 
+def test_k_core_exhausted_rounds_return_partial_peel(spark):
+    from rust_graph_db_spark.operators.graph_algos import k_core
+
+    # a 51-vertex path at k=2 loses its two ends per round: 3 rounds
+    # leave 45 vertices, the two new ends still of degree 1
+    df = spark.range(50).select(F.col("id").alias("src"),
+                                (F.col("id") + 1).alias("dst"))
+    got = {r["id"]: r["degree"] for r in k_core(df, k=2, max_rounds=3)
+           .collect()}
+    assert sorted(got) == list(range(3, 48))
+    assert got[3] == got[47] == 1
+    assert k_core(df, k=2, max_rounds=30).count() == 0
+
+
 def test_stratified_exact_vs_duckdb(spark, duck):
     from rust_graph_db_spark.operators.sampling import stratified_exact
 
