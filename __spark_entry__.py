@@ -1638,7 +1638,8 @@ def _q_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     al. 2021 Table A1, curation.gopher_repetition) — dup-line
     fraction + dup-line char coverage + top-{2,3,4}-gram char
     coverage + dup-{5..10}-gram char coverage, one scan, zero
-    shuffles (array_sort + neighbor/run folds instead of groupBys).
+    shuffles (per-doc Counter tallies in Arrow batches instead of
+    groupBys).
     The synthetic docs are single-line, so the entry derives a
     multi-line page (a repeated seg-headline + a boilerplate footer +
     the original text), mirrored verbatim in the oracle, making every
@@ -3832,7 +3833,8 @@ def _mixture_oracle_sql() -> str:
 def _exact_bfs_with(max_hops: int) -> str:
     """Shared WITH RECURSIVE block: ``vv`` = vertex set, ``md`` =
     (root, node, d) minimum out-hop distances over ``knows``, bounded
-    at ``max_hops`` — the SQL twin of graph_algos._exact_out_dists.
+    at ``max_hops`` — the SQL twin of the ``exact=True`` HyperBall
+    path (``traversal.bfs_distances`` from every vertex).
     Must live inside a subquery (outer ``pre`` WITH is not RECURSIVE)."""
     return (
         # DISTINCT-over-UNION-ALL: DuckDB 1.0 does not dedup a plain
@@ -4454,10 +4456,11 @@ def _kn_perplexity_oracle_sql(max_ppl: float = 35.0) -> str:
 def _gopher_repetition_oracle_sql(top_ns=(2, 3, 4),
                                   dup_ns=(5, 6, 7, 8, 9, 10)) -> str:
     """SQL twin of _q_gopher_repetition: same derived page, grams via
-    unnest + GROUP BY (the relational form of Spark's sorted-array
-    folds — equal results, different plan), top gram via row_number
-    (c DESC, g ASC) = Spark's first-maximal-run-in-sorted-order,
-    fractions as one exact-int double divide rounded to 6."""
+    unnest + GROUP BY (the relational form of the operator's per-doc
+    Counter tallies — equal results, different plan), top gram via
+    row_number (c DESC, g ASC) = the operator's most frequent gram,
+    ties to the smallest, fractions as one exact-int double divide
+    rounded to 6."""
     ns = sorted(set(tuple(top_ns) + tuple(dup_ns)))
     ctes = [
         "pg AS (SELECT doc_id, substr(text, 1, 60) || ' alpha one.' "

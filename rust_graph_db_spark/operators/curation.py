@@ -1176,51 +1176,10 @@ def ccnet_ppl_buckets(docs: DataFrame, lm, id_col: str = "doc_id",
                         F.col("bucket") <= int(keep_max_bucket)))
 
 
-def _dup_occ_chars(sorted_col: str) -> str:
-    """SQL expr (for F.expr): total chars over OCCURRENCES of elements
-    appearing >= 2 times in the pre-sorted array column — equal
-    elements are adjacent after the sort, so an occurrence is a
-    duplicate iff it matches a neighbor."""
-    c = sorted_col
-    # The size-guard CASE matters: sequence(1, 0) on an empty array
-    # would yield the auto-DESCENDING [1, 0] and lean on CASE/AND
-    # short-circuiting to dodge out-of-bounds element_at — guard the
-    # whole fold instead so empty/singleton arrays never build a
-    # sequence at all (r6 ADVICE).
-    return (
-        f"CASE WHEN size({c}) < 2 THEN CAST(0 AS BIGINT) ELSE "
-        f"aggregate(transform(sequence(1, size({c})), i -> "
-        f"CASE WHEN (i > 1 AND element_at({c}, i) = "
-        f"element_at({c}, i - 1)) OR (i < size({c}) AND "
-        f"element_at({c}, i) = element_at({c}, i + 1)) "
-        f"THEN CAST(length(element_at({c}, i)) AS BIGINT) "
-        f"ELSE CAST(0 AS BIGINT) END), "
-        "CAST(0 AS BIGINT), (a, x) -> a + x) END")
-
-
-def _top_run_chars(sorted_col: str) -> str:
-    """SQL expr (for F.expr): count(top) * length(top) for the most
-    frequent element of the pre-sorted array column, ties resolved to
-    the lexicographically smallest (the strict '>' keeps the FIRST
-    maximal run, which is the smallest element in sorted order)."""
-    c = sorted_col
-    run = "CASE WHEN x = a.prev THEN a.run + 1 ELSE CAST(1 AS BIGINT) END"
-    return (
-        f"aggregate({c}, named_struct("
-        "'prev', CAST('' AS STRING), 'run', CAST(0 AS BIGINT), "
-        "'best', CAST(0 AS BIGINT), 'bg', CAST('' AS STRING)), "
-        f"(a, x) -> named_struct('prev', x, 'run', {run}, "
-        f"'best', CASE WHEN ({run}) > a.best THEN ({run}) "
-        "ELSE a.best END, "
-        f"'bg', CASE WHEN ({run}) > a.best THEN x ELSE a.bg END), "
-        "a -> a.best * CAST(length(a.bg) AS BIGINT))")
-
-
 def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text",
                       top_ns: tuple = (2, 3, 4),
-                      dup_ns: tuple = (5, 6, 7, 8, 9, 10),
-                      impl: str = "py") -> DataFrame:
+                      dup_ns: tuple = (5, 6, 7, 8, 9, 10)) -> DataFrame:
     """The full Gopher/MassiveText repetition battery (Rae et al.
     2021, "Scaling Language Models: ... Gopher", Table A1) — the
     canonical LLM-corpus quality filter family, extending
@@ -1237,118 +1196,26 @@ def gopher_repetition(df: DataFrame, id_col: str = "doc_id",
     - ``dup{n}_char_frac`` (n ∈ ``dup_ns``): chars in occurrences of
       n-grams appearing ≥2× / chars over all n-gram occurrences.
 
-    All numerators/denominators are exact BIGINT char sums (gram
+    All numerators/denominators are exact integer char sums (gram
     length includes its single joining spaces; ``char_cnt`` is the
     length of the single-space-joined token list), fractions are one
-    exact-int double divide rounded to 6 digits, and every fraction
-    is 0 when its denominator is 0 — conventions pinned so the DuckDB
-    oracle replays bitwise.
+    exact-int double divide rounded to 6 digits HALF_UP through
+    ``Decimal(repr(x))`` (the shortest-decimal-rendering semantics of
+    Spark's ``round``), and every fraction is 0 when its denominator
+    is 0 — conventions pinned so the DuckDB oracle replays bitwise.
+    Tokenization is Python ``re`` ``\\s+`` (≡ Java ``\\s+``
+    character-for-character) and lines are trimmed of ASCII spaces
+    only, mirroring ``F.trim``. Requires non-null ``text_col``.
 
     100 TB shape: every metric is WITHIN-document, so the whole
-    battery is ONE scan with ZERO shuffles — regardless of ``impl``.
-    The r7 A/B (same 2M-doc input, back-to-back, idle box, both
-    materializations forced) settled the r6 open question about the
-    interpreted-HOF cost decisively: ``impl="py"`` (the Arrow-batched
-    :func:`gopher_repetition_py`, value-EXACT vs this form by pytest)
-    runs the battery in **26.7 s vs 526.0 s** for ``impl="hof"`` —
-    ~20× — because Spark evaluates higher-order-function lambdas in
-    the interpreter while CPython+Counter pays ~13 µs/doc. ``"py"``
-    is therefore the default; the HOF form remains as the documented
-    loser and the byte-level mirror of the DuckDB oracle's
-    construction (the values are identical either way). Both forms:
-    grams build per row, per-gram frequencies via sort/fold or
-    Counter, nothing leaves the row until the final project —
-    compare: the naive per-(doc, gram) groupBy would shuffle ~9 gram
-    tables of the corpus' token volume.
-    """
-    if impl == "py":
-        return gopher_repetition_py(df, id_col, text_col,
-                                    top_ns, dup_ns)
-    if impl != "hof":
-        raise ValueError(f"gopher_repetition: impl must be 'py' or "
-                         f"'hof', got {impl!r}")
-    toks = tokens(F.col(text_col))
-    out = df.select(F.col(id_col), F.col(text_col).alias("_txt"),
-                    toks.alias("_toks"))
-    # trimmed non-empty lines, plus their sorted twin for dup folds
-    out = out.withColumn(
-        "_lines",
-        F.filter(F.transform(F.split(F.col("_txt"), "\n"),
-                             lambda x: F.trim(x)),
-                 lambda x: x != F.lit("")))
-    out = out.withColumn("_lsort", F.array_sort("_lines"))
-    gram_cols = {}
-    for n in sorted(set(tuple(top_ns) + tuple(dup_ns))):
-        gram_cols[n] = f"_g{n}s"
-        out = out.withColumn(
-            gram_cols[n],
-            F.array_sort(F.expr(
-                f"CASE WHEN size(_toks) >= {n} THEN "
-                f"transform(sequence(1, size(_toks) - {n - 1}), "
-                f"i -> array_join(slice(_toks, i, {n}), ' ')) "
-                "ELSE array() END")))
-
-    def frac(num: str, den: str):
-        return F.round(
-            F.when(F.expr(den) > 0,
-                   F.expr(num).cast("double")
-                   / F.expr(den).cast("double"))
-            .otherwise(F.lit(0.0)), 6)
-
-    line_tot = ("aggregate(_lsort, CAST(0 AS BIGINT), "
-                "(a, x) -> a + CAST(length(x) AS BIGINT))")
-    cols = [
-        F.col(id_col),
-        F.size("_toks").cast("long").alias("tok_cnt"),
-        F.length(F.array_join("_toks", " ")).cast("long")
-        .alias("char_cnt"),
-        F.size("_lines").cast("long").alias("line_cnt"),
-        F.round(F.when(
-            F.size("_lines") > 0,
-            F.lit(1.0) - F.size(F.array_distinct("_lines"))
-            / F.size("_lines")).otherwise(F.lit(0.0)), 6)
-        .cast("double").alias("dup_line_frac"),
-        frac(_dup_occ_chars("_lsort"), line_tot)
-        .alias("dup_line_char_frac"),
-    ]
-    for n in top_ns:
-        c = gram_cols[n]
-        tot = (f"aggregate({c}, CAST(0 AS BIGINT), "
-               "(a, x) -> a + CAST(length(x) AS BIGINT))")
-        cols.append(frac(_top_run_chars(c), tot)
-                    .alias(f"top{n}_char_frac"))
-    for n in dup_ns:
-        c = gram_cols[n]
-        tot = (f"aggregate({c}, CAST(0 AS BIGINT), "
-               "(a, x) -> a + CAST(length(x) AS BIGINT))")
-        cols.append(frac(_dup_occ_chars(c), tot)
-                    .alias(f"dup{n}_char_frac"))
-    return out.select(*cols)
-
-
-def gopher_repetition_py(df: DataFrame, id_col: str = "doc_id",
-                         text_col: str = "text",
-                         top_ns: tuple = (2, 3, 4),
-                         dup_ns: tuple = (5, 6, 7, 8, 9, 10)) -> DataFrame:
-    """Arrow-batched Python twin of :func:`gopher_repetition` — the
-    r6 verdict's one untried t20 alternative (its "What's wrong #3"):
-    the HOF form pays ~150 µs/doc because Spark higher-order-function
-    lambdas are interpreted, so this computes the identical battery
-    per document in a ``mapInPandas`` body (Counter-based, CPython)
-    instead. Values are EXACTLY equal to the Catalyst form
-    (pytest-asserted): same tokenization (``re`` \\s+ ≡ Java \\s+
-    character-for-character), ASCII-space-only line trim mirroring
-    ``F.trim``, and rounding through ``Decimal(repr(x))`` HALF_UP —
-    the shortest-decimal-rendering semantics of Spark's ``round``.
-
-    Both forms are ONE shuffle-free scan; the A/B difference is pure
-    per-document compute (HOF interpreter vs CPython + Arrow
-    transfer). Measured back-to-back at 2M docs on an idle box, both
-    materializations forced (SCALE.md §18): **26.7 s here vs 526.0 s
-    HOF (~20×)** — so this form is ``gopher_repetition``'s default
-    and the HOF form is the documented loser (kept as the oracle's
-    byte-level mirror). Requires non-null ``text_col`` (the HOF
-    form's null conventions are not replicated).
+    battery is ONE scan with ZERO shuffles: each Arrow batch is
+    computed in a ``mapInPandas`` body (Counter-based, CPython). The
+    r7 A/B (2M docs, back-to-back, idle box, both materializations
+    forced; SCALE.md §18) measured this form at 26.7 s against 526.0 s
+    for the same battery as interpreted Catalyst higher-order
+    functions (~20×), which is why that form was retired. Compare:
+    the naive per-(doc, gram) groupBy would shuffle ~9 gram tables of
+    the corpus' token volume.
     """
     import re as _re
     from collections import Counter
@@ -1381,7 +1248,7 @@ def gopher_repetition_py(df: DataFrame, id_col: str = "doc_id",
         lc = Counter(lines)
         ltot = sum(len(x) * c for x, c in lc.items())
         ldup = sum(len(x) * c for x, c in lc.items() if c >= 2)
-        # EXACTLY the Catalyst expression 1.0 - distinct/total (the
+        # EXACTLY the oracle's expression 1.0 - distinct/total (the
         # algebraically-equal (total-distinct)/total can differ in
         # the last ulp and flip the 6-digit rounding)
         if lines:

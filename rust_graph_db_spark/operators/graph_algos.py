@@ -17,20 +17,30 @@ Scale notes: components uses the large-star/small-star algorithm
 SoCC'14) — O(log² n) rounds, each round two self-joins + a min-agg, no
 driver-side state beyond the convergence probe. PageRank keeps ranks
 and links as two DataFrames hash-partitioned once on vertex id, so the
-per-iteration join is shuffle-free on the link side. The PageRank,
-label-propagation, k-core, k-truss and components loops all run on the
-``pregel.supersteps`` kernel: one pin per superstep group, with the
-halting count observed inside the pinning job.
+per-iteration join is shuffle-free on the link side.
+
+Loops on the ``pregel`` kernel (one pin per superstep group, with the
+halting count observed inside the pinning job):
+- ``pregel.supersteps``: PageRank (plain, weighted, personalized),
+  label propagation, k-core, k-truss, the components star rounds and
+  the SCC forward colour propagation;
+- ``pregel.pin`` in a loop of its own: the HyperBall sweep behind
+  the neighborhood function and harmonic/closeness centrality, the
+  SCC trim and backward-reach rounds, and (via
+  ``traversal.bfs_distances``) the HyperBall ``exact=True`` mode.
+MIS, betweenness, random walks and node2vec keep hand-rolled loops.
 """
 
 from __future__ import annotations
 
+from itertools import accumulate
 from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from rust_graph_db_spark.operators.pregel import pin, supersteps
+from rust_graph_db_spark.operators.traversal import bfs_distances
 
 
 def _pair_cols(edges: DataFrame) -> tuple:
@@ -938,39 +948,82 @@ def walk_skipgram_pairs(walks: DataFrame, window: int = 2) -> DataFrame:
                      .alias("dist")))
 
 
-def _exact_out_dists(e: DataFrame, max_hops: int) -> DataFrame:
-    """All-pairs bounded BFS: ``(root, node, d)`` with d = min number
-    of OUT-edge hops root→node (d = 0 for root itself), d ≤ max_hops.
-
-    This is the EXACT-oracle substrate behind ``exact=True`` on the
-    HyperBall family — level-synchronous frontier expansion with an
-    anti-join against settled pairs, the same loop shape as
-    ``traversal.bfs_distances`` but rooted at every vertex at once.
-    State is O(Σ ball sizes) rows, i.e. up to V² — deliberately NOT
-    the 100 TB path (that's the HLL sketches); it exists so the
-    sketch estimators have a driver-checkable ground truth.
-    """
+def _hb_frames(edges: DataFrame) -> tuple:
+    """``(e, verts)`` shared by the HyperBall sweep and the exact mode:
+    the pinned ``(src, dst)`` long edge list with null endpoints
+    dropped (both modes read it once per hop) and its vertex set
+    ``(id)``. The exact mode is ``bfs_distances(e, verts, max_hops)``:
+    bounded all-pairs BFS with O(Σ ball) state — deliberately NOT the
+    100 TB path (that's the sketches); it exists so the estimators
+    have a driver-checkable ground truth."""
+    s, d = _pair_cols(edges)
+    e = (edges.select(F.col(s).cast("long").alias("src"),
+                      F.col(d).cast("long").alias("dst"))
+         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
+         .localCheckpoint(eager=True))
     verts = (e.select(F.col("src").alias("id"))
-             .unionAll(e.select(F.col("dst").alias("id")))
-             .distinct())
-    dist = (verts.select(F.col("id").alias("root"),
-                         F.col("id").alias("node"),
-                         F.lit(0).alias("d"))
-            .localCheckpoint(eager=True))
-    frontier = dist
+             .unionAll(e.select(F.col("dst").alias("id"))).distinct())
+    return e, verts
+
+
+def _hyperball(e: DataFrame, verts: DataFrame, max_hops: int,
+               lgk: int) -> tuple:
+    """The HyperBall sweep (Boldi & Vigna, 2013) behind
+    :func:`neighborhood_function`, :func:`harmonic_centrality` and
+    :func:`closeness_centrality`. Returns ``(balls, totals)``:
+    ``balls`` = ``(id, sk, est, harm, sumd)`` per vertex at the last
+    hop run — ``sk`` the HLL sketch of the ball B(v, h), ``est`` its
+    estimate, ``harm`` = Σ_t Δ|B(v,t)|/t and ``sumd`` = Σ_t t·Δ|B(v,t)|
+    with each per-hop delta clamped at 0 (a sketch estimate can jitter
+    slightly downward between hops) — and ``totals`` = [Σ_v |B(v,h)|
+    for h = 0, 1, …], strictly increasing.
+
+    100 TB shape: per-vertex state is ONE fixed-size HLL register
+    array (Spark's DataSketches ``hll_sketch_agg``, 2^lgk registers)
+    plus three doubles, never a reachable set — n·2^lgk bytes no
+    matter how big the balls grow. Each hop is one frontier join
+    (sketches flow dst→src so balls grow along OUT-edges) and one
+    ``hll_union_agg`` groupBy, hash-keyed on vertex id with map-side
+    partial merging; the running doubles ride the aggregate as max()
+    over NULL-carrying neighbor rows (no extra join). Each hop is
+    pinned by ``pregel.pin`` with the hop total read in that same
+    job, and the sweep stops at the first hop whose total does not
+    exceed the previous one (every ball saturated, up to HLL jitter).
+    Estimates carry HLL error ~1.04/√2^lgk (≈1.6% at lgk=12).
+    """
+    balls, (n,) = pin(
+        verts.groupBy("id")
+        .agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
+        .select("id", "sk", F.lit(1.0).alias("est"),    # |B(v,0)| = 1
+                F.lit(0.0).alias("harm"), F.lit(0.0).alias("sumd")),
+        n=F.count(F.lit(1)))
+    totals = [n]
+    none = F.lit(None).cast("double")
     for h in range(1, max_hops + 1):
-        nxt = (frontier.join(e, frontier["node"] == e["src"])
-               .select("root", e["dst"].alias("node"),
-                       F.lit(h).alias("d"))
-               .distinct()
-               .join(dist.select("root", "node"), ["root", "node"],
-                     "left_anti")
-               .localCheckpoint(eager=True))
-        if nxt.isEmpty():
+        # B(v,h) = B(v,h-1) ∪ ⋃_{(v,w)∈E} B(w,h-1)
+        from_nbrs = (e.join(balls, e["dst"] == balls["id"])
+                     .select(e["src"].alias("id"), "sk", none.alias("est"),
+                             none.alias("harm"), none.alias("sumd")))
+        merged = (balls.unionAll(from_nbrs).groupBy("id")
+                  .agg(F.hll_union_agg("sk", True).alias("sk"),
+                       F.max("est").alias("est_prev"),
+                       F.max("harm").alias("harm"),
+                       F.max("sumd").alias("sumd")))
+        delta = F.greatest(F.hll_sketch_estimate("sk") - F.col("est_prev"),
+                           F.lit(0.0))
+        balls, (tot,) = pin(
+            merged.select("id", "sk",
+                          F.hll_sketch_estimate("sk").cast("double")
+                          .alias("est"),
+                          (F.col("harm") + delta / F.lit(float(h)))
+                          .alias("harm"),
+                          (F.col("sumd") + delta * F.lit(float(h)))
+                          .alias("sumd")),
+            t=F.coalesce(F.sum("est"), F.lit(0.0)))
+        if tot <= totals[-1]:
             break
-        dist = dist.unionAll(nxt).localCheckpoint(eager=True)
-        frontier = nxt
-    return dist
+        totals.append(int(tot))
+    return balls, totals
 
 
 def neighborhood_function(edges: DataFrame, max_hops: int = 8,
@@ -985,71 +1038,29 @@ def neighborhood_function(edges: DataFrame, max_hops: int = 8,
     summed per-vertex ball-size estimates (hop 0 = n vertices).
     Callers derive the effective diameter as the first h with
     N(h) ≥ 0.9·N(max_hops), and the average distance from successive
-    differences.
-
-    100 TB shape: per-vertex state is ONE fixed-size HLL register
-    array (Spark's DataSketches `hll_sketch_agg`, 2^lgk registers),
-    not a reachable set — the whole iteration keeps n·2^lgk bytes
-    regardless of ball sizes. Each round is one frontier join
-    (sketches flow dst→src so balls grow along OUT-edges) and one
-    `hll_union_agg` groupBy, hash-keyed on vertex id with map-side
-    partial merging; `localCheckpoint` truncates lineage per round.
-    Early-exits when N(h) stops growing (all balls saturated).
-    Estimates carry HLL error (~1.04/√2^lgk ≈ 1.6% at lgk=12); the
-    pytest checks them against exact all-pairs BFS within that bound.
+    differences. Once the sweep saturates, the remaining hops repeat
+    the last total, so N(h) is monotone by construction. Scale shape
+    and HLL error: see :func:`_hyperball`; the pytest checks the
+    estimates against exact all-pairs BFS.
 
     ``exact=True`` swaps the sketches for an exact bounded all-pairs
-    BFS (``_exact_out_dists`` — O(Σ ball) state, NOT the scale path):
-    identical output contract, zero estimation error, fully mirrorable
-    as a recursive-CTE SQL oracle. Use it for correctness gates and
-    small graphs; leave the default for production scale.
+    BFS (``traversal.bfs_distances`` from every vertex — O(Σ ball)
+    state, NOT the scale path): identical output contract, zero
+    estimation error, fully mirrorable as a recursive-CTE SQL oracle.
+    Use it for correctness gates and small graphs; leave the default
+    for production scale.
     """
-    s, d = _pair_cols(edges)
-    e = (edges.select(F.col(s).cast("long").alias("src"),
-                      F.col(d).cast("long").alias("dst"))
-         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-         .localCheckpoint(eager=True))
-    spark = edges.sparkSession
+    e, verts = _hb_frames(edges)
     if exact:
-        dists = _exact_out_dists(e, max_hops)
-        by_d = {int(r["d"]): int(r["c"]) for r in
-                dists.groupBy("d").agg(F.count(F.lit(1)).alias("c"))
-                .collect()}
-        out, run = [], 0
-        for h in range(max_hops + 1):
-            run += by_d.get(h, 0)
-            out.append((h, run))
-        return spark.createDataFrame(out, "hop INT, n_pairs LONG")
-    verts = (e.select(F.col("src").alias("id"))
-             .unionAll(e.select(F.col("dst").alias("id")))
-             .distinct())
-    balls = (verts.groupBy("id")
-             .agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
-             .localCheckpoint(eager=True))
-    n = balls.count()
-    spark = edges.sparkSession
-    if n == 0:                                   # empty graph: N(h) ≡ 0
-        return spark.createDataFrame(
-            [(h, 0) for h in range(max_hops + 1)], "hop INT, n_pairs LONG")
-    out = [(0, int(n))]
-    prev = int(n)
-    for h in range(1, max_hops + 1):
-        # ball_v(h) = ball_v(h-1) ∪ ⋃_{(v,w)∈E} ball_w(h-1)
-        from_nbrs = (e.join(balls, e["dst"] == balls["id"])
-                     .select(e["src"].alias("id"), "sk"))
-        balls = (balls.select("id", "sk").unionAll(from_nbrs)
-                 .groupBy("id")
-                 .agg(F.hll_union_agg("sk", True).alias("sk"))
-                 .localCheckpoint(eager=True))
-        total = int(balls.select(
-            F.coalesce(F.sum(F.hll_sketch_estimate("sk")), F.lit(0))
-            .alias("t")).first()["t"])
-        out.append((h, total))
-        if total == prev:        # every ball saturated — done early
-            out.extend((hh, total) for hh in range(h + 1, max_hops + 1))
-            break
-        prev = total
-    return spark.createDataFrame(out, "hop INT, n_pairs LONG")
+        by_d = dict(bfs_distances(e, verts, max_hops).groupBy("dist")
+                    .count().collect())
+        totals = list(accumulate(by_d.get(h, 0)
+                                 for h in range(max_hops + 1)))
+    else:
+        totals = _hyperball(e, verts, max_hops, lgk)[1]
+    return edges.sparkSession.createDataFrame(
+        [(h, totals[min(h, len(totals) - 1)]) for h in range(max_hops + 1)],
+        "hop INT, n_pairs LONG")
 
 
 def harmonic_centrality(edges: DataFrame, max_hops: int = 8,
@@ -1065,76 +1076,23 @@ def harmonic_centrality(edges: DataFrame, max_hops: int = 8,
     the common "centrality of a target" reading), pass the edge list
     with src/dst swapped.
 
-    Returns ``(id, harmonic DOUBLE)``, one row per vertex.
-
-    100 TB shape: identical to ``neighborhood_function`` — one
-    fixed-size HLL register array per vertex (n·2^lgk bytes total
-    state, never materialized reachable sets), one frontier join and
-    one ``hll_union_agg`` groupBy per hop, both hash-keyed on vertex
-    id with map-side partial merging, ``localCheckpoint`` lineage
-    truncation per round, early exit when every ball saturates. The
-    running (est, harm) pair rides the aggregated frame as max()
-    aggregates (neighbor rows carry NULLs, so max() picks the one
-    self row — no extra join). Per-hop deltas inherit HLL error
-    (~1.04/√2^lgk) and are clamped at 0, since a sketch estimate can
-    jitter slightly downward between rounds; the pytest checks the
-    result against exact all-pairs BFS within that bound.
+    Returns ``(id, harmonic DOUBLE)``, one row per vertex. Scale shape
+    and HLL error: see :func:`_hyperball`; per-hop deltas are clamped
+    at 0, and the pytest checks the result against exact all-pairs BFS.
 
     ``exact=True`` computes H(v) = Σ 1/d(v,u) from the exact bounded
-    all-pairs BFS (``_exact_out_dists``) instead of sketch deltas —
-    the driver-checkable oracle path, not the 100 TB path.
+    all-pairs BFS (``traversal.bfs_distances``) instead of sketch
+    deltas — the driver-checkable oracle path, not the 100 TB path.
     """
-    s, d = _pair_cols(edges)
-    e = (edges.select(F.col(s).cast("long").alias("src"),
-                      F.col(d).cast("long").alias("dst"))
-         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-         .localCheckpoint(eager=True))
-    verts = (e.select(F.col("src").alias("id"))
-             .unionAll(e.select(F.col("dst").alias("id")))
-             .distinct())
-    if exact:
-        dists = _exact_out_dists(e, max_hops)
-        h = (dists.where(F.col("d") >= 1)
-             .groupBy("root")
-             .agg(F.sum(F.lit(1.0) / F.col("d")).alias("harmonic")))
-        return (verts.join(h, verts["id"] == h["root"], "left")
-                .select("id", F.coalesce("harmonic", F.lit(0.0))
-                        .alias("harmonic")))
-    balls = (verts.groupBy("id")
-             .agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
-             .select("id", "sk",
-                     F.lit(1.0).alias("est"),      # |B(v,0)| = 1
-                     F.lit(0.0).alias("harm"))
-             .localCheckpoint(eager=True))
-    spark = edges.sparkSession
-    n = balls.count()
-    if n == 0:
-        return spark.createDataFrame([], "id LONG, harmonic DOUBLE")
-    prev_tot = float(n)                          # Σ|B(v,0)| = n
-    for h in range(1, max_hops + 1):
-        from_nbrs = (e.join(balls, e["dst"] == balls["id"])
-                     .select(e["src"].alias("id"), "sk",
-                             F.lit(None).cast("double").alias("est"),
-                             F.lit(None).cast("double").alias("harm")))
-        merged = (balls.unionAll(from_nbrs)
-                  .groupBy("id")
-                  .agg(F.hll_union_agg("sk", True).alias("sk"),
-                       F.max("est").alias("est_prev"),
-                       F.max("harm").alias("harm")))
-        balls = (merged.select(
-            "id", "sk",
-            F.hll_sketch_estimate("sk").cast("double").alias("est"),
-            (F.col("harm")
-             + F.greatest(
-                 F.hll_sketch_estimate("sk") - F.col("est_prev"),
-                 F.lit(0.0)) / F.lit(float(h))).alias("harm"))
-            .localCheckpoint(eager=True))
-        # early exit: total estimate unchanged → every ball saturated
-        tot = float(balls.agg(F.sum("est").alias("t")).first()["t"])
-        if tot <= prev_tot:
-            break
-        prev_tot = tot
-    return balls.select("id", F.col("harm").alias("harmonic"))
+    e, verts = _hb_frames(edges)
+    if not exact:
+        balls = _hyperball(e, verts, max_hops, lgk)[0]
+        return balls.select("id", F.col("harm").alias("harmonic"))
+    return (bfs_distances(e, verts, max_hops).groupBy("start_id")
+            .agg(F.coalesce(F.sum(F.when(F.col("dist") >= 1,
+                                         F.lit(1.0) / F.col("dist"))),
+                            F.lit(0.0)).alias("harmonic"))
+            .select(F.col("start_id").alias("id"), "harmonic"))
 
 
 def closeness_centrality(edges: DataFrame, max_hops: int = 8,
@@ -1153,79 +1111,28 @@ def closeness_centrality(edges: DataFrame, max_hops: int = 8,
     Convention matches :func:`harmonic_centrality`: OUTWARD — balls
     grow along out-edges; swap src/dst for the inward variant.
 
-    Returns ``(id, closeness DOUBLE)``, one row per vertex.
+    Returns ``(id, closeness DOUBLE)``, one row per vertex. Scale shape
+    and HLL error: see :func:`_hyperball` (S(v) is its ``sumd``
+    column, r(v) its estimate minus 1, both clamped at 0).
 
-    100 TB shape: identical to ``harmonic_centrality`` — per-vertex
-    state is one fixed-size HLL register array plus two running
-    doubles (est, sumd = Σ h·Δ|B(v,h)|), one frontier join and one
-    ``hll_union_agg`` groupBy per hop, map-side partial merges,
-    ``localCheckpoint`` per round, early exit on saturation. Per-hop
-    deltas inherit HLL error and are clamped at 0.
-
-    ``exact=True`` computes r(v)/S(v) from the exact bounded all-pairs
-    BFS (``_exact_out_dists``) — the driver-checkable oracle path, not
-    the 100 TB path.
+    ``exact=True`` computes r(v) and S(v) from the exact bounded
+    all-pairs BFS (``traversal.bfs_distances``) — the driver-checkable
+    oracle path, not the 100 TB path.
     """
-    s, d = _pair_cols(edges)
-    e = (edges.select(F.col(s).cast("long").alias("src"),
-                      F.col(d).cast("long").alias("dst"))
-         .where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-         .localCheckpoint(eager=True))
-    verts = (e.select(F.col("src").alias("id"))
-             .unionAll(e.select(F.col("dst").alias("id")))
-             .distinct())
+    e, verts = _hb_frames(edges)
     if exact:
-        n = verts.count()
-        if n == 0:
-            return edges.sparkSession.createDataFrame(
-                [], "id LONG, closeness DOUBLE")
-        dists = _exact_out_dists(e, max_hops)
-        agg = (dists.where(F.col("d") >= 1)
-               .groupBy("root")
-               .agg(F.count(F.lit(1)).cast("double").alias("r"),
-                    F.sum("d").cast("double").alias("sumd")))
-        return (verts.join(agg, verts["id"] == agg["root"], "left")
-                .select(
-                    "id",
-                    F.when(F.coalesce("sumd", F.lit(0.0)) > 0.0,
-                           F.col("r") * F.col("r")
-                           / (F.lit(float(n)) * F.col("sumd")))
-                     .otherwise(F.lit(0.0)).alias("closeness")))
-    balls = (verts.groupBy("id")
-             .agg(F.hll_sketch_agg("id", F.lit(lgk)).alias("sk"))
-             .select("id", "sk",
-                     F.lit(1.0).alias("est"),      # |B(v,0)| = 1
-                     F.lit(0.0).alias("sumd"))     # Σ d(v,·) so far
-             .localCheckpoint(eager=True))
-    spark = edges.sparkSession
-    n = balls.count()
-    if n == 0:
-        return spark.createDataFrame([], "id LONG, closeness DOUBLE")
-    prev_tot = float(n)
-    for h in range(1, max_hops + 1):
-        from_nbrs = (e.join(balls, e["dst"] == balls["id"])
-                     .select(e["src"].alias("id"), "sk",
-                             F.lit(None).cast("double").alias("est"),
-                             F.lit(None).cast("double").alias("sumd")))
-        merged = (balls.unionAll(from_nbrs)
-                  .groupBy("id")
-                  .agg(F.hll_union_agg("sk", True).alias("sk"),
-                       F.max("est").alias("est_prev"),
-                       F.max("sumd").alias("sumd")))
-        balls = (merged.select(
-            "id", "sk",
-            F.hll_sketch_estimate("sk").cast("double").alias("est"),
-            (F.col("sumd")
-             + F.greatest(
-                 F.hll_sketch_estimate("sk") - F.col("est_prev"),
-                 F.lit(0.0)) * F.lit(float(h))).alias("sumd"))
-            .localCheckpoint(eager=True))
-        tot = float(balls.agg(F.sum("est").alias("t")).first()["t"])
-        if tot <= prev_tot:
-            break
-        prev_tot = tot
-    r = F.greatest(F.col("est") - 1.0, F.lit(0.0))
-    return balls.select(
+        acc, (n,) = pin(
+            bfs_distances(e, verts, max_hops).groupBy("start_id")
+            .agg(F.count_if(F.col("dist") >= 1).cast("double").alias("r"),
+                 F.sum("dist").cast("double").alias("sumd"))
+            .select(F.col("start_id").alias("id"), "r", "sumd"),
+            n=F.count(F.lit(1)))
+        r = F.col("r")
+    else:
+        acc, totals = _hyperball(e, verts, max_hops, lgk)
+        n = totals[0]
+        r = F.greatest(F.col("est") - 1.0, F.lit(0.0))
+    return acc.select(
         "id",
         F.when(F.col("sumd") > 0.0,
                r * r / (F.lit(float(n)) * F.col("sumd")))
@@ -1313,27 +1220,45 @@ def strongly_connected_components(
     class — the reached set is exactly that root's SCC — then peels the
     found SCCs and repeats. Every join is an equi-join on vertex id
     (same shuffle discipline as the PageRank loop), per-iteration frames
-    are ``localCheckpoint``-pinned, and phases peel one SCC per color
-    class, so phase count is bounded by the SCC condensation depth, not
-    vertex count. Forward propagation is diameter-bound like
-    :func:`~rust_graph_db_spark.operators.traversal.bfs_distances`.
+    are pinned with their emptiness count read in the same job, and
+    phases peel one SCC per color class, so phase count is bounded by
+    the SCC condensation depth, not vertex count. Forward propagation
+    runs on ``pregel.supersteps`` and is diameter-bound like
+    :func:`~rust_graph_db_spark.operators.traversal.bfs_distances`;
+    it raises ``RuntimeError`` when ``max_prop_iter`` steps reach no
+    fixpoint.
     """
     s, d = _pair_cols(edges)
-    raw = (edges.select(F.col(s).cast("long").alias("u"),
-                        F.col(d).cast("long").alias("v"))
-           .where(F.col("u").isNotNull() & F.col("v").isNotNull())
-           .localCheckpoint(eager=True))
+    count = F.count(F.lit(1))
+    raw, (n_raw,) = pin(
+        edges.select(F.col(s).cast("long").alias("u"),
+                     F.col(d).cast("long").alias("v"))
+        .where(F.col("u").isNotNull() & F.col("v").isNotNull()), n=count)
     spark = edges.sparkSession
-    if raw.count() <= driver_threshold:
+    if n_raw <= driver_threshold:
         out = _tarjan_scc([(r["u"], r["v"]) for r in raw.collect()])
         return spark.createDataFrame(out or [], "id LONG, component LONG")
 
-    verts = (raw.select(F.col("u").alias("id"))
-             .unionAll(raw.select(F.col("v").alias("id"))).distinct())
     active_e = raw.where(F.col("u") != F.col("v")).distinct() \
                   .localCheckpoint(eager=True)
-    active_v = verts.localCheckpoint(eager=True)
+    active_v, (n_active,) = pin(
+        raw.select(F.col("u").alias("id"))
+        .unionAll(raw.select(F.col("v").alias("id"))).distinct(), n=count)
     assigned = spark.createDataFrame([], "id LONG, component LONG")
+
+    def restrict(e: DataFrame) -> DataFrame:
+        """Edges with both endpoints still active, pinned."""
+        return (e.join(active_v.withColumnRenamed("id", "u"), "u",
+                       "left_semi")
+                .join(active_v.withColumnRenamed("id", "v"), "v",
+                      "left_semi")
+                .select("u", "v").localCheckpoint(eager=True))
+
+    def propagate(colors: DataFrame) -> DataFrame:
+        msgs = (colors.join(active_e, colors["id"] == active_e["u"])
+                .select(F.col("v").alias("id"), "color"))
+        return (colors.unionAll(msgs).groupBy("id")
+                .agg(F.max("color").alias("color")))
 
     for _ in range(max_phases):
         # ---- trim: no out-edges or no in-edges ⇒ singleton SCC
@@ -1341,46 +1266,34 @@ def strongly_connected_components(
             core = (active_e.select(F.col("u").alias("id")).distinct()
                     .join(active_e.select(F.col("v").alias("id")).distinct(),
                           "id"))
-            trimmed = active_v.join(core, "id", "left_anti") \
-                              .localCheckpoint(eager=True)
-            if trimmed.isEmpty():
+            trimmed, (n_trim,) = pin(
+                active_v.join(core, "id", "left_anti"), n=count)
+            if n_trim == 0:
                 break
             assigned = assigned.unionAll(
                 trimmed.select("id", F.col("id").alias("component")))
-            active_v = active_v.join(core, "id").localCheckpoint(eager=True)
-            active_e = (active_e
-                        .join(active_v.withColumnRenamed("id", "u"), "u",
-                              "left_semi")
-                        .join(active_v.withColumnRenamed("id", "v"), "v",
-                              "left_semi")
-                        .select("u", "v").localCheckpoint(eager=True))
-        if active_v.isEmpty():
+            active_v, (n_active,) = pin(active_v.join(core, "id"), n=count)
+            active_e = restrict(active_e)
+        if n_active == 0:
             break
-        # ---- forward max-id propagation to fixpoint
-        colors = active_v.select("id", F.col("id").alias("color")) \
-                         .localCheckpoint(eager=True)
-        prev_probe = None
-        for _i in range(max_prop_iter):
-            msgs = (colors.join(active_e, colors["id"] == active_e["u"])
-                    .select(F.col("v").alias("id"), "color"))
-            colors = (colors.unionAll(msgs).groupBy("id")
-                      .agg(F.max("color").alias("color"))
-                      .localCheckpoint(eager=True))
-            probe = tuple(colors.agg(
-                F.sum(F.xxhash64("id", "color").cast("decimal(38,0)"))
-            ).first())
-            if probe == prev_probe:
-                break
-            prev_probe = probe
-        else:
+        # ---- forward max-id propagation to fixpoint, probed as an
+        # order-free hash sum (decimal: a long sum of 64-bit hashes
+        # overflows under ANSI mode)
+        colors, converged = supersteps(
+            active_v.select("id", F.col("id").alias("color")), propagate,
+            int(max_prop_iter),
+            probe={"h": F.sum(F.xxhash64("id", "color")
+                              .cast("decimal(38,0)"))})
+        if not converged:
             raise RuntimeError(
                 "scc: forward propagation did not converge within "
                 f"max_prop_iter={max_prop_iter}")
         # ---- backward reach from color roots within each color class
+        # (every class has its root, so the first frontier is non-empty)
         members = colors.where(F.col("id") == F.col("color")) \
                         .localCheckpoint(eager=True)
         frontier = members
-        while not frontier.isEmpty():
+        while True:
             step = (active_e.join(frontier.withColumnRenamed("id", "v"), "v")
                     .select(F.col("u").alias("id"), "color")
                     .distinct())
@@ -1388,26 +1301,23 @@ def strongly_connected_components(
             step = (step.join(colors.withColumnRenamed("color", "c"), "id")
                     .where(F.col("color") == F.col("c"))
                     .select("id", "color"))
-            frontier = step.join(members, "id", "left_anti") \
-                           .localCheckpoint(eager=True)
+            frontier, (n_new,) = pin(
+                step.join(members, "id", "left_anti"), n=count)
+            if n_new == 0:
+                break
             members = members.unionAll(frontier).localCheckpoint(eager=True)
         # normalize component = min member id per SCC root
         rel = members.groupBy("color").agg(F.min("id").alias("component"))
         assigned = assigned.unionAll(
             members.join(rel, "color").select("id", "component"))
         # ---- peel found SCCs
-        active_v = active_v.join(members, "id", "left_anti") \
-                           .localCheckpoint(eager=True)
-        active_e = (active_e
-                    .join(active_v.withColumnRenamed("id", "u"), "u",
-                          "left_semi")
-                    .join(active_v.withColumnRenamed("id", "v"), "v",
-                          "left_semi")
-                    .select("u", "v").localCheckpoint(eager=True))
-        if active_v.isEmpty():
+        active_v, (n_active,) = pin(
+            active_v.join(members, "id", "left_anti"), n=count)
+        active_e = restrict(active_e)
+        if n_active == 0:
             break
     else:
-        if not active_v.isEmpty():
+        if n_active:
             raise RuntimeError(
                 f"scc: not converged within max_phases={max_phases}")
     return assigned

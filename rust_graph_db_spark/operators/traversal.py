@@ -21,7 +21,7 @@ usually small enough for AQE to broadcast it.
 
 from __future__ import annotations
 
-from typing import Iterable, Optional, Sequence
+from typing import Optional
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -63,7 +63,6 @@ def bfs_distances(
     start,
     max_hops: int = 30,
     direction: str = "out",
-    targets: Optional[Sequence[int]] = None,
     driver_threshold: int = 2_000_000,
 ) -> DataFrame:
     """Unweighted single/multi-source shortest distances.
@@ -95,8 +94,7 @@ def bfs_distances(
     # must never be materialized on the driver just to be rejected.
     n_starts = src.count()
     starts = []
-    if (targets is None and n_starts
-            and n_hop * n_starts <= driver_threshold):
+    if n_starts and n_hop * n_starts <= driver_threshold:
         starts = [r["id"] for r in src.collect()]
     if starts:
         from collections import deque
@@ -125,7 +123,6 @@ def bfs_distances(
             out or [], "start_id LONG, id LONG, dist INT")
     visited = src.select(F.col("id").alias("start_id"), F.col("id"), F.lit(0).alias("dist"))
     frontier = visited
-    target_set = set(int(t) for t in targets) if targets else None
 
     # Two BFS levels per materialization: the per-iteration driver
     # barrier (job submit + checkpoint) dominates sparse frontiers, so
@@ -158,11 +155,6 @@ def bfs_distances(
         # expanded inside this round; only the deepest level continues
         deepest = min(level + 1, max_hops)
         frontier = new.where(F.col("dist") == deepest)
-        if target_set is not None:
-            reached = {r["id"] for r in new.where(F.col("id").isin(list(target_set))).collect()}
-            target_set -= reached
-            if not target_set:
-                break
         level += 2
     return visited
 

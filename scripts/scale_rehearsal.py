@@ -508,15 +508,15 @@ def main() -> None:
           lambda: c4_line_filter(pages, min_sentences=3))
 
     # t20: the full Gopher battery is zero-shuffle by construction
-    # (within-document sorted-array folds) — the stage measures the
-    # per-row fold cost of 9 gram families on ~60-token docs. The
-    # whole-row-hash agg forces EVERY metric column to evaluate: a
+    # (within-document Counter tallies in Arrow batches) — the stage
+    # measures the per-row cost of 9 gram families on ~60-token docs.
+    # The whole-row-hash agg forces EVERY metric column to evaluate: a
     # bare count() is answered from parquet metadata, and an agg over
-    # a column subset lets Catalyst prune the other folds
+    # a column subset lets Catalyst prune the other columns
     from rust_graph_db_spark.operators.curation import gopher_repetition
 
     def _gopher_forced():
-        g = gopher_repetition(pages, impl="hof")
+        g = gopher_repetition(pages)
         cols = ", ".join(g.columns)
         # bit_xor (never overflows under ANSI, unlike sum) + a
         # non-tautological filter: count() of a bare global agg knows
@@ -526,20 +526,6 @@ def main() -> None:
                 .where(F.col("rowhash") != F.lit(123456789)))
 
     stage("gopher_repetition", _gopher_forced)
-
-    # r7 A/B (r6 verdict #8): the Arrow-batched Python twin on the
-    # SAME pages, same forced materialization — the one untried t20
-    # alternative to the interpreted-HOF cost
-    from rust_graph_db_spark.operators.curation import gopher_repetition_py
-
-    def _gopher_py_forced():
-        g = gopher_repetition_py(pages)
-        cols = ", ".join(g.columns)
-        return (g.agg(F.expr(f"bit_xor(xxhash64(struct({cols})))")
-                      .alias("rowhash"))
-                .where(F.col("rowhash") != F.lit(123456789)))
-
-    stage("gopher_repetition_py", _gopher_py_forced)
     bench = (docs.where(F.col("doc_id") % 200 == 0)
              .select("doc_id",
                      F.concat("text", F.lit(" qq eval")).alias("text")))

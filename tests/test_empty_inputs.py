@@ -107,9 +107,15 @@ def test_graph_ops_on_empty(empty):
     ppr = {r.id: r.rank
            for r in ga.personalized_pagerank(e, [7], iterations=2).collect()}
     assert ppr == {7: pytest.approx(0.15)}
-    # neighborhood function: N(h) = 0 for every hop, one row per hop
-    nf = ga.neighborhood_function(e, max_hops=3).collect()
-    assert [(r.hop, r.n_pairs) for r in nf] == [(h, 0) for h in range(4)]
+    # neighborhood function: N(h) = 0 for every hop, one row per hop,
+    # in both the sketch sweep and the exact mode
+    for exact in (False, True):
+        nf = ga.neighborhood_function(e, max_hops=3, exact=exact).collect()
+        assert [(r.hop, r.n_pairs) for r in nf] == [(h, 0) for h in range(4)]
+        h = ga.harmonic_centrality(e, max_hops=3, exact=exact)
+        assert h.columns == ["id", "harmonic"] and h.count() == 0
+        c = ga.closeness_centrality(e, max_hops=3, exact=exact)
+        assert c.columns == ["id", "closeness"] and c.count() == 0
 
 
 def test_similarity_ops_on_empty(empty):
@@ -165,6 +171,21 @@ def test_graph_ops_drop_null_endpoints(spark):
     assert ga.random_walks(e, 3).count() > 0
     assert sorted(r.id for r in ga.degrees(e).collect()) == [1, 2, 3]
     assert {r.id for r in ga.connected_components(e).collect()} == {1, 2, 3}
+    # HyperBall trio: 1->2, 3->1 survive; exact distances from 1: {2: 1},
+    # from 3: {1: 1, 2: 2}, from 2: none. Balls of <= 3 vertices are
+    # exact in the sketches too.
+    for exact in (False, True):
+        nf = ga.neighborhood_function(e, max_hops=3, exact=exact).collect()
+        assert [(r.hop, r.n_pairs) for r in nf] \
+            == [(0, 3), (1, 5), (2, 6), (3, 6)]
+        hc = {r.id: r.harmonic for r in
+              ga.harmonic_centrality(e, max_hops=3, exact=exact).collect()}
+        assert hc == {1: pytest.approx(1.0), 2: 0.0, 3: pytest.approx(1.5)}
+        # Lin's index r^2 / (n * S): 1 -> 1/3, 3 -> 4/(3*3)
+        cc = {r.id: r.closeness for r in
+              ga.closeness_centrality(e, max_hops=3, exact=exact).collect()}
+        assert cc == {1: pytest.approx(1 / 3), 2: 0.0,
+                      3: pytest.approx(4 / 9)}
 
 
 def test_r5_s3_ops_on_empty(empty):

@@ -627,6 +627,21 @@ def test_scc_distributed(spark):
     assert got == SCC_EXPECT
 
 
+def test_scc_distributed_propagation_exhausted_raises(spark):
+    """A 10-vertex directed cycle needs 9 forward max-colour steps; with
+    max_prop_iter=2 the distributed path must raise, not return the
+    colouring of an unconverged propagation."""
+    from rust_graph_db_spark.operators.graph_algos import (
+        strongly_connected_components,
+    )
+
+    e = spark.createDataFrame([(i, (i + 1) % 10) for i in range(10)],
+                              "u LONG, v LONG")
+    with pytest.raises(RuntimeError, match="max_prop_iter=2"):
+        strongly_connected_components(
+            e, driver_threshold=0, max_prop_iter=2).collect()
+
+
 def test_scc_distributed_matches_driver_random(spark):
     # random sparse digraph: the distributed coloring path must agree
     # with driver-side Tarjan exactly

@@ -2319,14 +2319,21 @@ def test_bloom_decontaminate_empty_benchmark_flags_nothing(spark):
 
 
 def _ref_gopher(text, top_ns=(2, 3, 4), dup_ns=(5, 6, 7, 8, 9, 10)):
-    """Pure-Python twin of curation.gopher_repetition for one doc."""
+    """Pure-Python twin of curation.gopher_repetition for one doc:
+    lines trimmed of ASCII spaces only (F.trim), fractions rounded to
+    6 digits HALF_UP on the shortest decimal rendering (Spark round)."""
     from collections import Counter
+    from decimal import ROUND_HALF_UP, Decimal
+
+    def r6(x):
+        return float(Decimal(repr(x)).quantize(
+            Decimal("0.000001"), rounding=ROUND_HALF_UP))
 
     # mirror Spark split semantics (split keeps empty fields, so
     # split('', '\s+') -> [''])
     import re
     toks = re.split(r"\s+", text.lower())
-    lines = [ln.strip() for ln in text.split("\n")]
+    lines = [ln.strip(" ") for ln in text.split("\n")]
     lines = [ln for ln in lines if ln != ""]
     out = {
         "tok_cnt": len(toks),
@@ -2336,9 +2343,8 @@ def _ref_gopher(text, top_ns=(2, 3, 4), dup_ns=(5, 6, 7, 8, 9, 10)):
     lc = Counter(lines)
     ltot = sum(len(ln) * c for ln, c in lc.items())
     ldup = sum(len(ln) * c for ln, c in lc.items() if c >= 2)
-    out["dup_line_frac"] = round(
-        1.0 - len(lc) / len(lines), 6) if lines else 0.0
-    out["dup_line_char_frac"] = round(ldup / ltot, 6) if ltot else 0.0
+    out["dup_line_frac"] = r6(1.0 - len(lc) / len(lines)) if lines else 0.0
+    out["dup_line_char_frac"] = r6(ldup / ltot) if ltot else 0.0
 
     def grams(n):
         return [" ".join(toks[i:i + n])
@@ -2350,14 +2356,14 @@ def _ref_gopher(text, top_ns=(2, 3, 4), dup_ns=(5, 6, 7, 8, 9, 10)):
         tot = sum(len(x) * c for x, c in g.items())
         if tot:
             top = min(g, key=lambda x: (-g[x], x))
-            out[f"top{n}_char_frac"] = round(g[top] * len(top) / tot, 6)
+            out[f"top{n}_char_frac"] = r6(g[top] * len(top) / tot)
         else:
             out[f"top{n}_char_frac"] = 0.0
     for n in dup_ns:
         g = Counter(grams(n))
         tot = sum(len(x) * c for x, c in g.items())
         dup = sum(len(x) * c for x, c in g.items() if c >= 2)
-        out[f"dup{n}_char_frac"] = round(dup / tot, 6) if tot else 0.0
+        out[f"dup{n}_char_frac"] = r6(dup / tot) if tot else 0.0
     return out
 
 
@@ -2376,9 +2382,8 @@ def test_gopher_repetition_matches_reference(spark):
         # fewer tokens than the larger gram sizes
         (2, "one two three"),
         (3, "solo"),
-        # empty text: every gram array is empty — the _dup_occ_chars
-        # size guard (r6 ADVICE) must yield 0, never an out-of-bounds
-        # sequence(1, 0) fold
+        # empty text: every gram family is empty — every fraction
+        # must be 0, never a division by zero
         (4, ""),
     ]
     df = spark.createDataFrame(docs, "doc_id LONG, text STRING")
@@ -2403,12 +2408,12 @@ def test_gopher_repetition_matches_reference(spark):
 
 
 def test_gopher_repetition_py_twin_exact(spark):
-    """The Arrow-batched Python twin (r6 verdict 'untried
-    alternative') must equal the Catalyst HOF form EXACTLY — same
-    tokenization, trim, tie-breaks and HALF_UP shortest-decimal
-    rounding — on crafted docs plus a real-data slice."""
-    from rust_graph_db_spark.operators.curation import (
-        gopher_repetition, gopher_repetition_py)
+    """gopher_repetition must equal the pure-Python reference
+    (_ref_gopher) EXACTLY — same tokenization, trim, tie-breaks and
+    6-digit rounding — on crafted docs plus a real-data slice. Docs 6
+    and 7 pin the trim and rounding conventions with hand-computed
+    values."""
+    from rust_graph_db_spark.operators.curation import gopher_repetition
 
     crafted = spark.createDataFrame([
         (0, "the cat sat on the mat near the cat mat today ok\n"
@@ -2420,15 +2425,27 @@ def test_gopher_repetition_py_twin_exact(spark):
         (3, "solo"),
         (4, ""),
         (5, "x y " * 40),
+        # only ASCII spaces are trimmed: the \t and \r lines stay
+        # distinct, the space-padded line equals the last one
+        (6, "dup line\t\ndup line\r\n  dup line  \ndup line"),
+        # dup_line_char_frac = 2/256 = 0.0078125, a 7th-digit half
+        (7, "a\na\n" + "b" * 254),
     ], "doc_id LONG, text STRING")
     real = (spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
             .select("doc_id", "text").limit(60))
-    for df in (crafted, real):
-        a = {r["doc_id"]: r.asDict()
-             for r in gopher_repetition(df, impl="hof").collect()}
-        b = {r["doc_id"]: r.asDict()
-             for r in gopher_repetition_py(df).collect()}
-        assert a == b
+    for df in (real, crafted):
+        want = {r["doc_id"]: _ref_gopher(r["text"]) for r in df.collect()}
+        got = {r["doc_id"]: {k: v for k, v in r.asDict().items()
+                             if k != "doc_id"}
+               for r in gopher_repetition(df).collect()}
+        assert got == want
+    # doc 6: 4 lines, 3 distinct; dup chars 8+8 of 9+9+8+8
+    assert got[6]["line_cnt"] == 4 and got[6]["tok_cnt"] == 8
+    assert got[6]["dup_line_frac"] == 0.25
+    assert got[6]["dup_line_char_frac"] == 0.470588
+    # doc 7: HALF_UP, not round-half-even (0.007812)
+    assert got[7]["dup_line_frac"] == 0.333333
+    assert got[7]["dup_line_char_frac"] == 0.007813
 
 
 def test_keep_best_per_cluster(spark):
