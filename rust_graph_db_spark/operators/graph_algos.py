@@ -26,9 +26,10 @@ halting count observed inside the pinning job):
   the SCC forward colour propagation;
 - ``pregel.pin`` in a loop of its own: the HyperBall sweep behind
   the neighborhood function and harmonic/closeness centrality, the
-  SCC trim and backward-reach rounds, and (via
-  ``traversal.bfs_distances``) the HyperBall ``exact=True`` mode.
-MIS, betweenness, random walks and node2vec keep hand-rolled loops.
+  SCC trim and backward-reach rounds, the MIS rounds, the betweenness
+  forward levels, the walk loop shared by random walks and node2vec,
+  and (via ``traversal.bfs_distances``) the HyperBall ``exact=True``
+  mode.
 """
 
 from __future__ import annotations
@@ -213,9 +214,10 @@ def maximal_independent_set(edges: DataFrame, seed: int = 0,
 
     100 TB shape: O(log n) expected rounds; each round is one
     neighbor-max aggregation (map-side combinable) + two anti-joins,
-    all hash-keyed on vertex id; per-round ``localCheckpoint`` keeps
-    lineage O(1). State is one (id, priority) row per ACTIVE vertex —
-    monotonically shrinking.
+    all hash-keyed on vertex id; per-round pins keep lineage O(1), and
+    the active pin observes the halting count in its own job. State is
+    one (id, priority) row per ACTIVE vertex — monotonically
+    shrinking.
     """
     s, d = _pair_cols(edges)
     dir_e = (edges.select(F.col(s).cast("long").alias("u"),
@@ -242,45 +244,42 @@ def maximal_independent_set(edges: DataFrame, seed: int = 0,
                  .unionAll(dir_e.select(F.col("v").alias("id")))
                  .distinct().localCheckpoint(eager=True))
     pri = md5_long(md5_key(F.lit(int(seed)), F.col("id")))
-    verts = (all_verts.join(loops, "id", "left_anti")
-             .select("id", pri.alias("pri"))
-             .localCheckpoint(eager=True))
+    count = F.count(F.lit(1))
+    active, (n_active,) = pin(all_verts.join(loops, "id", "left_anti")
+                              .select("id", pri.alias("pri")), n=count)
     spark = edges.sparkSession
     mis = spark.createDataFrame([], "id LONG")
-    active = verts
     act_e = e
     for _ in range(int(max_rounds)):
-        if active.isEmpty():
+        if not n_active:
             break
         nbr_max = (act_e.join(active.select(F.col("id").alias("v"),
                                             F.col("pri").alias("npri")),
                               "v")
                    .groupBy("u").agg(F.max("npri").alias("mp")))
-        winners = (active.join(nbr_max,
-                               active["id"] == nbr_max["u"], "left")
-                   .where(F.col("mp").isNull()
-                          | (F.col("pri") > F.col("mp")))
-                   .select("id")
-                   .localCheckpoint(eager=True))
+        winners, _ = pin(active.join(nbr_max,
+                                     active["id"] == nbr_max["u"], "left")
+                         .where(F.col("mp").isNull()
+                                | (F.col("pri") > F.col("mp")))
+                         .select("id"))
         mis = mis.unionAll(winners)
         retired = winners.unionAll(
             act_e.join(winners.withColumnRenamed("id", "u"), "u",
                        "left_semi")
             .select(F.col("v").alias("id"))).distinct()
-        active = (active.join(retired, "id", "left_anti")
-                  .localCheckpoint(eager=True))
-        act_e = (act_e
-                 .join(active.select(F.col("id").alias("u")), "u",
-                       "left_semi")
-                 .join(active.select(F.col("id").alias("v")), "v",
-                       "left_semi")
-                 .select("u", "v").localCheckpoint(eager=True))
-    else:
-        if not active.isEmpty():
-            raise RuntimeError(
-                "maximal_independent_set: not converged within "
-                f"max_rounds={max_rounds} (md5 priority tie?)")
-    mis = mis.localCheckpoint(eager=True)
+        active, (n_active,) = pin(active.join(retired, "id", "left_anti"),
+                                  n=count)
+        act_e, _ = pin(act_e
+                       .join(active.select(F.col("id").alias("u")), "u",
+                             "left_semi")
+                       .join(active.select(F.col("id").alias("v")), "v",
+                             "left_semi")
+                       .select("u", "v"))
+    if n_active:
+        raise RuntimeError(
+            "maximal_independent_set: not converged within "
+            f"max_rounds={max_rounds} (md5 priority tie?)")
+    # mis is a lazy union of pinned frames, read once: no pin of its own
     return (all_verts
             .join(mis.withColumn("in_mis", F.lit(True)), "id", "left")
             .select("id", F.coalesce("in_mis", F.lit(False))
@@ -867,12 +866,34 @@ def random_walks(edges: DataFrame, walk_length: int = 10,
     collect_list — the same ``links`` frame the PageRank family uses)
     and each of the ``walk_length`` rounds is one equi-join of the
     frontier (walk_id, cur) against it, hash-keyed on vertex id; the
-    frontier carries three longs per live walk. Per-round
-    ``localCheckpoint`` keeps lineage O(1). Hub vertices are one key
+    frontier carries three longs per live walk. Each round is one pin
+    (lineage O(1)) that also counts the live walks, so walks that all
+    die early end the loop early. Hub vertices are one key
     each in the join — skew-salt upstream if a single hub's walks
     exceed a task (standard salting applies because steps are
     independent given the current vertex).
     """
+    def choose(frontier: DataFrame, links: DataFrame, h) -> DataFrame:
+        return (frontier.join(links, frontier["cur"] == links["src"])
+                .select("walk_id", "start",
+                        F.element_at(
+                            "nbrs",
+                            (F.pmod(h, F.size("nbrs")) + 1).cast("int"))
+                         .alias("cur")))
+
+    return _walks(edges, walk_length, walks_per_vertex, seed, starts,
+                  hash_mode, choose)
+
+
+def _walks(edges: DataFrame, walk_length: int, walks_per_vertex: int,
+           seed: int, starts: Optional[DataFrame], hash_mode: str,
+           choose) -> DataFrame:
+    """The walk loop shared by :func:`random_walks` and
+    :func:`node2vec_walks`: ``choose(frontier, links, h)`` maps the
+    live walks ``(walk_id, start, cur, …)`` one step on, given the
+    sorted adjacency ``links (src, nbrs)`` and the step's choice hash
+    ``h``. Each step is one pin whose observed size is the number of
+    live walks; the loop stops at the first step with none."""
     s, d = _pair_cols(edges)
     e = (edges.select(F.col(s).cast("long").alias("src"),
                       F.col(d).cast("long").alias("dst"))
@@ -894,29 +915,25 @@ def random_walks(edges: DataFrame, walk_length: int = 10,
     wid = (F.col("start") * walks_per_vertex + F.col("rep")
            if hash_mode == "md5" else
            F.xxhash64(F.lit(seed), "start", "rep"))
-    frontier = (base.select(
+    count = F.count(F.lit(1))
+    frontier, (live,) = pin(base.select(
         "start",
         F.explode(F.array(*[F.lit(r) for r in range(walks_per_vertex)]))
          .alias("rep"))
         .select(wid.cast("long").alias("walk_id"),
-                "start", F.col("start").alias("cur"))
-        .localCheckpoint(eager=True))
+                "start", F.col("start").alias("cur"),
+                F.lit(None).cast("long").alias("prev")), n=count)
     out = frontier.select("walk_id", "start", F.lit(0).alias("step"),
                           F.col("cur").alias("vertex"))
     for t in range(1, walk_length):
+        if not live:
+            break
         h = _walk_choice_hash(hash_mode, seed, t,
                               F.col("walk_id"), F.col("cur"))
-        nxt = (frontier.join(links, frontier["cur"] == links["src"])
-               .select("walk_id", "start",
-                       F.element_at(
-                           "nbrs",
-                           (F.pmod(h, F.size("nbrs")) + 1).cast("int"))
-                        .alias("cur"))
-               .localCheckpoint(eager=True))
-        out = out.unionAll(nxt.select(
+        frontier, (live,) = pin(choose(frontier, links, h), n=count)
+        out = out.unionAll(frontier.select(
             "walk_id", "start", F.lit(t).alias("step"),
             F.col("cur").alias("vertex")))
-        frontier = nxt
     return out
 
 
@@ -1396,22 +1413,22 @@ def betweenness_centrality(
     ``sigma_v/sigma_w * (1 + delta_w)`` from each level to its
     predecessors (Brandes 2001, Thm. 6). All state is (source, vertex)
     keyed — k pivots × reachable vertices — every join an equi-join on
-    vertex id, frames ``localCheckpoint``-pinned per level. Level count
+    vertex id, frames pinned per level, each forward pin observing the
+    level's size (the halting test) in its own job. Level count
     is diameter-bound like
     :func:`~rust_graph_db_spark.operators.traversal.bfs_distances`;
     paths longer than ``max_hops`` are truncated (contributions from
     deeper vertices are dropped), so raise it for high-diameter graphs.
     """
     s, d = _pair_cols(edges)
-    e = (edges.select(F.col(s).cast("long").alias("u"),
-                      F.col(d).cast("long").alias("v"))
-         .where(F.col("u").isNotNull() & F.col("v").isNotNull())
-         .where(F.col("u") != F.col("v")).distinct()
-         .localCheckpoint(eager=True))
-    verts = (e.select(F.col("u").alias("id"))
-             .unionAll(e.select(F.col("v").alias("id"))).distinct()
-             .localCheckpoint(eager=True))
-    n = verts.count()
+    count = F.count(F.lit(1))
+    e, (m,) = pin(edges.select(F.col(s).cast("long").alias("u"),
+                               F.col(d).cast("long").alias("v"))
+                  .where(F.col("u").isNotNull() & F.col("v").isNotNull())
+                  .where(F.col("u") != F.col("v")).distinct(), n=count)
+    verts, (n,) = pin(e.select(F.col("u").alias("id"))
+                      .unionAll(e.select(F.col("v").alias("id"))).distinct(),
+                      n=count)
     if (sources is None and sample is None
             and auto_sample_threshold is not None
             and n > auto_sample_threshold):
@@ -1432,11 +1449,11 @@ def betweenness_centrality(
     scale = float(n) / float(k) if k else 1.0
 
     # Size-gated driver path (r7): the distributed loops below cost
-    # ~4 jobs per BFS level (two level-synchronous passes, each
-    # checkpoint-pinned) — ~90 jobs on the bench graph — while the
-    # whole per-pivot working set is k·(V+E) recurrence steps. At or
-    # below ``driver_gate`` such steps (default 5e7, a few seconds of
-    # driver CPU; edges are 16 B/row to collect) the same
+    # two pinned jobs per BFS level (one in each level-synchronous
+    # pass), while the whole per-pivot working set is k·(V+E)
+    # recurrence steps. At or below ``driver_gate`` such steps
+    # (default 5e7, a few seconds of driver CPU; edges are 16 B/row to
+    # collect) the same
     # level-synchronous recurrence runs driver-side: identical sigma /
     # delta arithmetic (IEEE doubles), identical max_hops truncation,
     # identical pivots (the salted-hash draw is still computed by
@@ -1444,7 +1461,6 @@ def betweenness_centrality(
     # distributed loops; graphs above the gate take them unchanged —
     # the same auto-degradation discipline as the SCC driver-Tarjan
     # gate.
-    m = e.count()
     if driver_gate and k * (n + m) <= driver_gate:
         pivots = [r["s"] for r in srcs.collect()]
         bc_map = _brandes_local([(r["u"], r["v"]) for r in e.collect()],
@@ -1467,9 +1483,9 @@ def betweenness_centrality(
         cand = (frontier.join(e, frontier["v"] == e["u"])
                 .select("s", e["v"].alias("v"), "sigma")
                 .groupBy("s", "v").agg(F.sum("sigma").alias("sigma")))
-        frontier = (cand.join(vis.select("s", "v"), ["s", "v"], "left_anti")
-                    .localCheckpoint(eager=True))
-        if frontier.isEmpty():
+        frontier, (n_new,) = pin(
+            cand.join(vis.select("s", "v"), ["s", "v"], "left_anti"), n=count)
+        if not n_new:
             break
         # vis stays a LAZY union of checkpointed levels: every branch
         # is pinned, so recomputing the union is a concat, and skipping
@@ -1537,34 +1553,11 @@ def node2vec_walks(edges: DataFrame, walk_length: int = 10,
     trick doesn't apply distributed (it preprocesses per DIRECTED EDGE
     pair — O(Σ deg²) storage), so the fold is the standard trade.
     """
-    s, d = _pair_cols(edges)
-    e = (edges.select(F.col(s).cast("long").alias("src"),
-                      F.col(d).cast("long").alias("dst"))
-         .where(F.col("src").isNotNull() & F.col("dst").isNotNull()))
-    links = (e.groupBy("src")
-             .agg(F.sort_array(F.collect_list("dst")).alias("nbrs"))
-             .localCheckpoint(eager=True))
-    plinks = (links.select(F.col("src").alias("psrc"),
-                           F.col("nbrs").alias("pnbrs")))
-    base = (starts.select(F.col(starts.columns[0]).cast("long")
-                          .alias("start"))
-            if starts is not None else
-            e.select(F.col("src").alias("start")).distinct())
-    wid = (F.col("start") * walks_per_vertex + F.col("rep")
-           if hash_mode == "md5" else
-           F.xxhash64(F.lit(seed), "start", "rep"))
-    frontier = (base.select(
-        "start",
-        F.explode(F.array(*[F.lit(r) for r in range(walks_per_vertex)]))
-         .alias("rep"))
-        .select(wid.cast("long").alias("walk_id"),
-                "start", F.col("start").alias("cur"),
-                F.lit(None).cast("long").alias("prev"))
-        .localCheckpoint(eager=True))
-    out = frontier.select("walk_id", "start", F.lit(0).alias("step"),
-                          F.col("cur").alias("vertex"))
     inv_p, inv_q = 1.0 / float(p), 1.0 / float(q)
-    for t in range(1, walk_length):
+
+    def choose(frontier: DataFrame, links: DataFrame, h) -> DataFrame:
+        plinks = (links.select(F.col("src").alias("psrc"),
+                               F.col("nbrs").alias("pnbrs")))
         j = (frontier.join(links, frontier["cur"] == links["src"])
              .join(plinks, frontier["prev"] == plinks["psrc"], "left"))
         pn = F.coalesce(F.col("pnbrs"), F.array().cast("array<long>"))
@@ -1577,9 +1570,7 @@ def node2vec_walks(edges: DataFrame, walk_length: int = 10,
                        .when(F.array_contains(pn, x), F.lit(1.0))
                        .otherwise(F.lit(inv_q)))
         total = F.aggregate(weights, F.lit(0.0), lambda a, w: a + w)
-        r = (F.pmod(_walk_choice_hash(hash_mode, seed, t,
-                                      F.col("walk_id"), F.col("cur")),
-                    F.lit(1_000_003)).cast("double")
+        r = (F.pmod(h, F.lit(1_000_003)).cast("double")
              / F.lit(1_000_003.0)) * total
         # first index whose cumulative weight reaches r (inverse-CDF);
         # fold state = (cumulative, chosen index, position counter)
@@ -1596,16 +1587,13 @@ def node2vec_walks(edges: DataFrame, walk_length: int = 10,
             # float-edge fallback: r == total exactly → last index
             lambda st: F.when(st["idx"] >= 0, st["idx"])
                         .otherwise(st["i"] - 1))
-        nxt = (j.select("walk_id", "start",
+        return j.select("walk_id", "start",
                         F.element_at("nbrs", (idx + 1).cast("int"))
                          .alias("cur"),
                         frontier["cur"].alias("prev"))
-               .localCheckpoint(eager=True))
-        out = out.unionAll(nxt.select(
-            "walk_id", "start", F.lit(t).alias("step"),
-            F.col("cur").alias("vertex")))
-        frontier = nxt
-    return out
+
+    return _walks(edges, walk_length, walks_per_vertex, seed, starts,
+                  hash_mode, choose)
 
 
 def modularity(edges: DataFrame, assignment: DataFrame,

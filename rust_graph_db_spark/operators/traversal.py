@@ -8,8 +8,10 @@ k-hop neighborhoods (vle.rs:196-251).
 Spark-first redesign: the frontier is a DataFrame; one BFS level = one
 equi-join against the edge set; multiplicity and path identity live in
 ARRAY<LONG> columns. Scale levers, applied every iteration:
-- ``localCheckpoint(eager=True)`` truncates lineage (an N-hop loop would
-  otherwise build an N-deep plan and re-execute level 1 at level N);
+- each level is pinned (``pregel.pin``: an eager ``localCheckpoint``)
+  to truncate lineage (an N-hop loop would otherwise build an N-deep
+  plan and re-execute level 1 at level N), and the same job observes
+  the level's size or target hit, so no halting test costs a job;
 - the frontier is the only growing state; visited sets stay columnar;
 - per-level ``limit`` implements the reference's ``max_paths`` cap
   *inside* the loop, before the blow-up, not after.
@@ -29,24 +31,23 @@ from pyspark.sql import functions as F
 from rust_graph_db_spark.operators.pregel import pin
 
 
-def _edges(e: DataFrame, direction: str) -> DataFrame:
-    """Normalize to (a, b) hop pairs for the requested direction.
+def _edges(e: DataFrame, direction: str, *carry) -> DataFrame:
+    """Normalize to (a, b, *carry) hop pairs for the requested direction;
+    ``carry`` columns (an edge weight, an edge id) ride along unchanged.
 
     Null endpoints are dropped here: they carry no traversal semantics,
     and the driver-side BFS/Dijkstra paths collect edges via Arrow —
     a null in a long column coerces the whole pandas column to float64,
     which then fails the LongType re-ingest (observed, not hypothetical).
     """
+    if direction not in ("out", "in", "both"):
+        raise ValueError(f"bad direction {direction!r}")
     e = e.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    out = e.select(F.col("src").alias("a"), F.col("dst").alias("b"))
+    out = e.select(F.col("src").alias("a"), F.col("dst").alias("b"), *carry)
+    inn = e.select(F.col("dst").alias("a"), F.col("src").alias("b"), *carry)
     if direction == "out":
         return out
-    inn = e.select(F.col("dst").alias("a"), F.col("src").alias("b"))
-    if direction == "in":
-        return inn
-    if direction == "both":
-        return out.unionAll(inn)
-    raise ValueError(f"bad direction {direction!r}")
+    return inn if direction == "in" else out.unionAll(inn)
 
 
 def _start_frame(edges_or_df, start) -> DataFrame:
@@ -170,21 +171,30 @@ def shortest_path(
     (reference G1: returns vertex path + cost; None if unreachable).
 
     Path arrays ride along the frontier; ties broken by lexicographic
-    path order for determinism (min over STRUCT<dist, path>).
+    path order for determinism (min over STRUCT<dist, path>). Each
+    level's pin observes its size and the target's (dist, path), so no
+    level pays a probe job of its own. ``visited_ids`` is re-pinned per
+    level: the anti-join against a lazy union of the pinned levels ran
+    about twice as slow per level as against one pinned frame.
     """
+    if int(start) == int(end):
+        return {"path": [int(start)], "cost": 0, "hops": 0}
     hop = _edges(edges, direction).localCheckpoint(eager=True)
     spark = edges.sparkSession
     frontier = spark.createDataFrame([(int(start), 0)], "id LONG, dist INT").select(
         "id", "dist", F.array(F.col("id")).alias("path")
     )
     visited_ids = frontier.select("id")
-
-    for level in range(1, max_hops + 1):
-        hit = frontier.where(F.col("id") == int(end)).collect()
-        if hit:
-            row = min(hit, key=lambda r: (r["dist"], r["path"]))
-            return {"path": list(row["path"]), "cost": row["dist"], "hops": row["dist"]}
-        nxt = (
+    probe = {"n": F.count(F.lit(1)),
+             "hit": F.min(F.when(F.col("id") == int(end),
+                                 F.struct("dist", "path")))}
+    n, hit = 1, None
+    for level in range(max_hops):
+        if hit is not None or n == 0:
+            break
+        if level:
+            visited_ids, _ = pin(visited_ids.unionAll(frontier.select("id")))
+        frontier, (n, hit) = pin(
             frontier.join(hop, frontier["id"] == hop["a"])
             .select(
                 F.col("b").alias("id"),
@@ -194,19 +204,12 @@ def shortest_path(
             .join(visited_ids, "id", "left_anti")
             .groupBy("id")
             .agg(F.min(F.struct("dist", "path")).alias("s"))
-            .select("id", F.col("s.dist").alias("dist"), F.col("s.path").alias("path"))
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            return None
-        visited_ids = visited_ids.unionAll(nxt.select("id")).localCheckpoint(eager=True)
-        frontier = nxt
-    # max_hops exhausted; one last check
-    hit = frontier.where(F.col("id") == int(end)).collect()
-    if hit:
-        row = min(hit, key=lambda r: (r["dist"], r["path"]))
-        return {"path": list(row["path"]), "cost": row["dist"], "hops": row["dist"]}
-    return None
+            .select("id", F.col("s.dist").alias("dist"), F.col("s.path").alias("path")),
+            **probe)
+    if hit is None:
+        return None
+    return {"path": list(hit["path"]), "cost": hit["dist"],
+            "hops": hit["dist"]}
 
 
 def weighted_shortest_distances(
@@ -234,23 +237,12 @@ def weighted_shortest_distances(
     the distributed path; negative weights always do (Dijkstra
     would be wrong).
     """
-    if direction == "out":
-        hop = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"),
-                           F.col(weight_col).cast("double").alias("w"))
-    elif direction == "in":
-        hop = edges.select(F.col("dst").alias("a"), F.col("src").alias("b"),
-                           F.col(weight_col).cast("double").alias("w"))
-    else:
-        hop = edges.select(F.col("src").alias("a"), F.col("dst").alias("b"),
-                           F.col(weight_col).cast("double").alias("w")).unionAll(
-            edges.select(F.col("dst"), F.col("src"), F.col(weight_col).cast("double")))
-
-    # null endpoints carry no path semantics, and they'd coerce the
-    # Arrow-collected id columns to float64 on the driver path (see
-    # _edges) — drop before the checkpoint
-    hop = (hop.where(F.col("a").isNotNull() & F.col("b").isNotNull())
-           .localCheckpoint(eager=True))  # pinned: joined every round
-    if hop.count() <= driver_threshold:
+    # pinned: joined every round; its size (the driver gate) rides in
+    # the same job
+    hop, (n_hop,) = pin(
+        _edges(edges, direction, F.col(weight_col).cast("double").alias("w")),
+        n=F.count(F.lit(1)))
+    if n_hop <= driver_threshold:
         import heapq
         import math
 
@@ -294,24 +286,22 @@ def weighted_shortest_distances(
         cand = (c1.unionAll(relax(c1))
                 .groupBy("id").agg(F.min("dist").alias("dist")))
         # One full-outer merge carries both outputs of the round — the
-        # new distance table AND the improved-this-round flag — so each
-        # round materializes exactly one DataFrame (one Spark job); the
-        # improved-frontier filter below reads the checkpoint.
-        merged = (
+        # new distance table AND the improved-this-round flag, whose
+        # count rides in the pinning job — so each round is one Spark
+        # job; the improved-frontier filter below reads the checkpoint.
+        merged, (n_imp,) = pin(
             dist.alias("d").join(cand.alias("c"), "id", "full")
             .select(
                 "id",
                 F.least("d.dist", "c.dist").alias("dist"),
                 (F.col("d.dist").isNull()
                  | (F.col("c.dist") < F.col("d.dist"))).alias("_imp"),
-            )
-            .localCheckpoint(eager=True)
-        )
+            ),
+            n=F.count_if(F.col("_imp")))
         dist = merged.select("id", "dist")
-        improved = merged.where("_imp").select("id", "dist")
-        if improved.isEmpty():
+        if not n_imp:
             break
-        frontier = improved
+        frontier = merged.where("_imp").select("id", "dist")
     return dist
 
 
@@ -343,27 +333,27 @@ def expand_paths(
     duplicated start id cannot duplicate paths, and for a DataFrame
     seed AQE picks broadcast or shuffle by the seed's size. The edge
     input is not pinned (it is a scan, re-read per level); each
-    intermediate level is pinned once and probed for emptiness, and the
-    last level stays lazy — nothing reads it before the final union —
+    intermediate level is pinned once, its pin observing whether it is
+    empty, and the last level stays lazy — nothing reads it before the final union —
     unless ``max_paths`` caps it: a capped level is always pinned, so
     every action on the result sees the same capped subset.
     """
     has_eid = "id" in edges.columns
-    e = edges.where(F.col("src").isNotNull() & F.col("dst").isNotNull())
-    eid = (F.col("id") if has_eid
-           else F.lit(None).cast("long")).alias("eid")
-    fwd = e.select(F.col("src").alias("a"), F.col("dst").alias("b"), eid)
-    rev = e.select(F.col("dst").alias("a"), F.col("src").alias("b"), eid)
-    if direction == "out":
-        hop = fwd
-    elif direction == "in":
-        hop = rev
-    elif direction == "both":
-        hop = fwd.unionAll(rev)
-    else:
-        raise ValueError(f"bad direction {direction!r}")
+    hop = _edges(edges, direction, (F.col("id") if has_eid
+                                    else F.lit(None).cast("long")).alias("eid"))
     epath0 = (F.array("eid") if has_eid
               else F.lit(None).cast("array<long>")).alias("epath")
+
+    def settle(df, lvl):
+        """Cap a level, pin it unless it is an uncapped last level, and
+        return it with its observed size (-1: lazy, unmeasured)."""
+        if max_paths is not None:
+            df = df.limit(max_paths)
+        if lvl < max_hops or max_paths is not None:
+            df, (n,) = pin(df, n=F.count(F.lit(1)))
+            return df, n
+        return df, -1
+
     first = hop
     if start is not None:
         sf = _start_frame(edges, start).select(F.col("id").alias("a"))
@@ -376,15 +366,10 @@ def expand_paths(
     )
     if not allow_cycles:
         paths = paths.where(F.col("a") != F.col("b"))
-    if max_paths is not None:
-        paths = paths.limit(max_paths)
-    if max_hops > 1 or max_paths is not None:
-        paths = paths.localCheckpoint(eager=True)
-
-    out = [paths] if min_hops <= 1 else []
-    cur = paths
+    cur, n = settle(paths, 1)
+    out = [cur] if min_hops <= 1 else []
     level = 1
-    while level < max_hops:
+    while n and level < max_hops:
         level += 1
         ext = cur.join(
             hop.select(F.col("a").alias("_ja"), F.col("b").alias("_jb"),
@@ -393,21 +378,14 @@ def expand_paths(
         )
         if not allow_cycles:
             ext = ext.where(~F.array_contains(F.col("vpath"), F.col("_jb")))
-        ext = ext.select(
+        cur, n = settle(ext.select(
             F.col("a"), F.col("_jb").alias("b"), F.lit(level).alias("hops"),
             F.array_append("vpath", F.col("_jb")).alias("vpath"),
             (F.array_append("epath", F.col("_je")) if has_eid
              else F.lit(None).cast("array<long>")).alias("epath"),
-        )
-        if max_paths is not None:
-            ext = ext.limit(max_paths)
-        if level < max_hops or max_paths is not None:
-            ext = ext.localCheckpoint(eager=True)
-        if level < max_hops and ext.isEmpty():
-            break
+        ), level)
         if level >= min_hops:
-            out.append(ext)
-        cur = ext
+            out.append(cur)
 
     if not out:
         schema = ("a LONG, b LONG, hops INT, vpath ARRAY<LONG>, "

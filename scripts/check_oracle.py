@@ -17,13 +17,20 @@ query whose Spark output schema contains an array/map/struct column
 (the driver's canonicalizer crashes on unhashable cells — the e12 red).
 
 Usage: python scripts/check_oracle.py [sf_dir] [query ...]
+       python scripts/check_oracle.py [sf_dir] --since <rev>
+
+``--since <rev>`` runs exactly the registry keys whose query function
+reaches a ``rust_graph_db_spark`` module changed since ``<rev>`` (see
+:func:`keys_reaching`).
 """
 
 from __future__ import annotations
 
+import ast
 import hashlib
 import math
 import os
+import subprocess
 import sys
 
 import duckdb
@@ -110,15 +117,140 @@ def value_hash(pdf):
     return h.hexdigest()[:16]
 
 
-def main() -> None:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
-    only = set(sys.argv[2:])
+PKG = "rust_graph_db_spark"
 
+
+def _load_entry():
     import importlib.util
     spec = importlib.util.spec_from_file_location(
         "entry", os.path.join(ROOT, "__spark_entry__.py"))
     entry = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entry)
+    return entry
+
+
+def _package_modules() -> dict:
+    """Dotted module name -> source path, for every module of PKG."""
+    mods = {}
+    for d, _, files in os.walk(os.path.join(ROOT, PKG)):
+        for f in files:
+            if f.endswith(".py"):
+                rel = os.path.relpath(os.path.join(d, f), ROOT)[:-3]
+                parts = rel.split(os.sep)
+                if parts[-1] == "__init__":
+                    parts.pop()
+                mods[".".join(parts)] = os.path.join(d, f)
+    return mods
+
+
+def _imports(tree: ast.AST, here: str, mods: dict) -> set:
+    """PKG modules imported anywhere in ``tree`` (function-level imports
+    included); ``here`` is the importing module, for relative imports.
+    ``from pkg import name`` reaches ``pkg.name`` when that is a module,
+    else ``pkg`` itself."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out.update(a.name for a in node.names if a.name in mods)
+        elif isinstance(node, ast.ImportFrom):
+            base = node.module or ""
+            if node.level:
+                pkg = here.split(".")
+                if not mods.get(here, "").endswith("__init__.py"):
+                    pkg = pkg[:-1]
+                pkg = pkg[:len(pkg) - node.level + 1]
+                base = ".".join(pkg + ([base] if base else []))
+            for a in node.names:
+                sub = f"{base}.{a.name}"
+                if sub in mods:
+                    out.add(sub)
+                elif base in mods:
+                    out.add(base)
+    return out
+
+
+def keys_reaching(changed: set) -> dict:
+    """Registry key -> the changed PKG modules its query function
+    reaches, for every key that reaches one.
+
+    Reach follows explicit import statements (module- and function-
+    level) from the key's top-level function in ``__spark_entry__.py``,
+    through the entry helpers it calls, then module to module inside
+    PKG. The implicit import of a parent package's ``__init__`` is not
+    followed: the root ``__init__`` reaches most of the package, so that
+    edge would map every key to every change.
+    """
+    mods = _package_modules()
+    graph = {}
+    for name, path in mods.items():
+        with open(path) as fh:
+            graph[name] = _imports(ast.parse(fh.read()), name, mods)
+    with open(os.path.join(ROOT, "__spark_entry__.py")) as fh:
+        etree = ast.parse(fh.read())
+    funcs = {n.name: n for n in etree.body if isinstance(n, ast.FunctionDef)}
+
+    def reach(start: set, edges) -> set:
+        seen, todo = set(), list(start)
+        while todo:
+            x = todo.pop()
+            if x not in seen:
+                seen.add(x)
+                todo.extend(edges(x))
+        return seen
+
+    def entry_edges(fname):
+        return {n.id for n in ast.walk(funcs[fname])
+                if isinstance(n, ast.Name) and n.id in funcs}
+
+    out = {}
+    for key, fn in _load_entry().queries().items():
+        top = getattr(fn, "__qualname__", "").split(".")[0]
+        if top not in funcs:
+            out[key] = sorted(changed)       # unknown shape: run it
+            continue
+        direct = set()
+        for f in reach({top}, entry_edges):
+            direct |= _imports(funcs[f], "", mods)
+        hit = reach(direct, lambda m: graph.get(m, ())) & changed
+        if hit:
+            out[key] = sorted(hit)
+    return out
+
+
+def changed_modules(rev: str) -> set:
+    """PKG modules changed (tracked or new) since ``rev``."""
+    def git(*args):
+        return subprocess.run(("git", "-C", ROOT) + args, check=True,
+                              capture_output=True, text=True).stdout.split()
+    paths = (git("diff", "--name-only", rev, "--", PKG)
+             + git("ls-files", "--others", "--exclude-standard", PKG))
+    mods = {os.path.normpath(p): m for m, p in
+            ((m, os.path.relpath(p, ROOT))
+             for m, p in _package_modules().items())}
+    return {mods[p] for p in map(os.path.normpath, paths) if p in mods}
+
+
+def main() -> None:
+    args = sys.argv[1:]
+    since = None
+    if "--since" in args:
+        i = args.index("--since")
+        since = args[i + 1]
+        del args[i:i + 2]
+    sf_dir = args[0] if args else "/root/testdata/sf0.01"
+    only = set(args[1:])
+    if since is not None:
+        changed = changed_modules(since)
+        mapped = keys_reaching(changed)
+        print(f"changed since {since}: {sorted(changed) or 'nothing'}")
+        for k in sorted(mapped):
+            print(f"  {k}: {', '.join(mapped[k])}")
+        if not mapped:
+            print("no registry key reaches a changed module")
+            return
+        only = set(mapped)
+
+    entry = _load_entry()
 
     from pyspark.sql import types as T
 

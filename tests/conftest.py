@@ -51,3 +51,38 @@ def oracle(duck):
         return len(got)
 
     return _cmp
+
+
+@pytest.fixture
+def pin_jobs(spark, monkeypatch):
+    """``pin_jobs(module, fn)`` runs ``fn()`` and returns ``(result,
+    jobs outside module.pin calls, number of module.pin calls)``: each
+    pin call runs under a job group of its own, so the count left in
+    the outer group is exactly the Spark work done outside the pins."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(module, fn):
+        outer, inner = (f"{k}-{uuid.uuid4().hex}" for k in ("outer", "pin"))
+        real, calls = module.pin, []
+
+        def counted(df, **aggs):
+            calls.append(1)
+            sc.setJobGroup(inner, inner)
+            try:
+                return real(df, **aggs)
+            finally:
+                sc.setJobGroup(outer, outer)
+
+        with monkeypatch.context() as m:
+            m.setattr(module, "pin", counted)
+            sc.setJobGroup(outer, outer)
+            try:
+                out = fn()
+            finally:
+                sc.setLocalProperty("spark.jobGroup.id", None)
+        return (out, len(sc.statusTracker().getJobIdsForGroup(outer)),
+                len(calls))
+
+    return run

@@ -100,3 +100,34 @@ def test_norm_stable_for_equal_values_and_specials():
     # numpy scalars unwrap to their python forms (the pandas surface)
     assert m._norm(np.int64(7)) == "7"
     assert m._norm(np.float64(0.0)) == "0.0" != m._norm(0)
+
+
+def test_since_maps_changed_modules_to_reaching_keys():
+    """``--since`` follows imports at any level: Cypher keys reach
+    traversal through the compiler's function-level import, x5 through
+    social's, g23 through graph_algos' module-level one."""
+    m = _load()
+    trav = m.keys_reaching({"rust_graph_db_spark.operators.traversal"})
+    for key in ("g2_weighted_sssp", "g3_vle", "g5_k_hop", "g23_mis",
+                "p17_shortest_path", "x5_network_analysis"):
+        assert key in trav, key
+    assert trav["g3_vle"] == ["rust_graph_db_spark.operators.traversal"]
+    bpe = m.keys_reaching({"rust_graph_db_spark.operators.bpe"})
+    assert "t11_bpe_merges" in bpe and "g3_vle" not in bpe
+    assert m.keys_reaching(set()) == {}
+
+
+def test_since_resolves_relative_imports():
+    import ast
+
+    m = _load()
+    mods = m._package_modules()
+    tree = ast.parse("def f():\n"
+                     "    from ..operators.graph_algos import pagerank\n"
+                     "from . import hashing\n")
+    got = m._imports(tree, "rust_graph_db_spark.functions.procedures", mods)
+    assert got == {"rust_graph_db_spark.operators.graph_algos",
+                   "rust_graph_db_spark.functions.hashing"}
+    pkg = m._imports(ast.parse("from .parser import parse_cypher\n"),
+                     "rust_graph_db_spark.parser", mods)
+    assert pkg == {"rust_graph_db_spark.parser.parser"}

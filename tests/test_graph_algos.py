@@ -1345,3 +1345,61 @@ def test_local_clustering_sums_to_triangle_count(spark, kg):
     total = triangle_count(e).collect()[0].triangles
     # every triangle contributes exactly one count to each corner
     assert lc.agg(F.sum("triangles")).collect()[0][0] == 3 * total
+
+
+def test_mis_round_runs_no_job_outside_its_pins(spark, pin_jobs):
+    """A MIS round's halting count rides in the active-set pin: a second
+    round adds pins but no job outside them. (Before the port each
+    round also ran an isEmpty() probe job, and nothing ran in a pin:
+    on this path one round ran 27 jobs, two rounds 46.)"""
+    from rust_graph_db_spark.operators import graph_algos as ga
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(20)],
+                                 "src LONG, dst LONG")
+
+    def rounds(r):
+        def run():
+            with pytest.raises(RuntimeError, match="not converged"):
+                ga.maximal_independent_set(path, max_rounds=r)
+        _, outside, pins = pin_jobs(ga, run)
+        return outside, pins
+
+    (out1, pins1), (out2, pins2) = rounds(1), rounds(2)
+    assert out2 == out1
+    assert pins2 > pins1
+
+
+def test_mis_exhausted_rounds_raise(spark):
+    # one Luby round cannot settle a 21-vertex path
+    from rust_graph_db_spark.operators.graph_algos import \
+        maximal_independent_set
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(20)],
+                                 "src LONG, dst LONG")
+    with pytest.raises(RuntimeError, match="not converged"):
+        maximal_independent_set(path, max_rounds=1)
+    rows = maximal_independent_set(path).collect()
+    assert len(rows) == 21
+
+
+@pytest.mark.parametrize("walker", ["random_walks", "node2vec_walks"])
+def test_walks_stop_when_every_walk_is_dead(spark, walker):
+    """On dag5 every walk dies within 2 steps, so walk_length=10 returns
+    the rows of walk_length=3 and runs the jobs of walk_length=4: the
+    loop stops at the first step with no live walk. (Before the shared
+    walk loop, walk_length=10 cost 25 jobs against 17 for random_walks
+    and 36 against 22 for node2vec_walks.)"""
+    from rust_graph_db_spark.operators import graph_algos as ga
+
+    dag = spark.createDataFrame([(1, 2), (1, 3), (2, 4), (2, 5), (3, 5)],
+                                "src LONG, dst LONG")
+    kw = {"p": 2.0, "q": 0.5} if walker == "node2vec_walks" else {}
+
+    def walks(n):
+        return _jobs_of(spark, lambda: sorted(map(tuple, getattr(ga, walker)(
+            dag, walk_length=n, walks_per_vertex=2, seed=3, **kw).collect())))
+
+    (rows10, jobs10), (rows3, _), (_, jobs4) = walks(10), walks(3), walks(4)
+    assert rows10 == rows3
+    assert max(r[2] for r in rows10) == 2
+    assert jobs10 == jobs4

@@ -185,3 +185,54 @@ def test_vle_build_runs_one_job_per_pinned_level(spark, dag):
 
     assert build_jobs(1, 1) == 0
     assert build_jobs(1, 2) <= 2
+
+
+def test_bad_direction_raises(dag):
+    w = dag.withColumn("weight", F.lit(1.0))
+    with pytest.raises(ValueError, match="bad direction"):
+        T.weighted_shortest_distances(w, [1], direction="sideways")
+    with pytest.raises(ValueError, match="bad direction"):
+        T.expand_paths(dag, [1], direction="sideways")
+
+
+@pytest.fixture(scope="module")
+def path7(spark):
+    # 0 → 1 → … → 6
+    return spark.createDataFrame([(i, i + 1) for i in range(6)],
+                                 "src LONG, dst LONG")
+
+
+def test_shortest_path_levels_run_inside_their_pins(path7, pin_jobs):
+    """Each level's size and target hit are observed by the level's own
+    pin, so the only job outside the pins is the edge checkpoint: the
+    count does not grow with the path. Before the port, 0 → 6 ran 62
+    jobs (10 per level, 0 → 3: 32), all of them outside any pin."""
+    from rust_graph_db_spark.operators import traversal
+
+    far, far_out, far_pins = pin_jobs(
+        traversal, lambda: T.shortest_path(path7, 0, 6))
+    near, near_out, near_pins = pin_jobs(
+        traversal, lambda: T.shortest_path(path7, 0, 3))
+    assert far == {"path": list(range(7)), "cost": 6, "hops": 6}
+    assert near == {"path": list(range(4)), "cost": 3, "hops": 3}
+    assert far_out == near_out <= 2
+    assert far_pins > near_pins
+
+
+def test_shortest_path_max_hops_boundary(path7):
+    # the target exactly at max_hops is found; one hop beyond is not
+    assert T.shortest_path(path7, 0, 4, max_hops=4) == {
+        "path": [0, 1, 2, 3, 4], "cost": 4, "hops": 4}
+    assert T.shortest_path(path7, 0, 5, max_hops=4) is None
+
+
+def test_shortest_path_start_is_end(dag):
+    assert T.shortest_path(dag, 3, 3) == {"path": [3], "cost": 0, "hops": 0}
+    assert T.shortest_path(dag, 3, 3, max_hops=0) == {
+        "path": [3], "cost": 0, "hops": 0}
+
+
+def test_shortest_path_lexicographic_tie_break(dag):
+    # 1→2→5 and 1→3→5 tie on cost; the smaller path wins
+    assert T.shortest_path(dag, 1, 5) == {"path": [1, 2, 5], "cost": 2,
+                                          "hops": 2}
