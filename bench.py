@@ -147,23 +147,10 @@ _STORE_QUERIES = {
 }
 
 
-def _n_exchanges(df) -> int:
-    import contextlib
-    import io
-    import re
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    # count DISTINCT plan nodes: "formatted" prints each operator in the
-    # tree AND again in the detail section, so a bare substring count
-    # reports exactly double the real Exchange count
-    return len(set(re.findall(r"\((\d+)\) Exchange", buf.getvalue())))
-
-
 def _bench_store(spark, sf_dir, timings, exchanges) -> None:
     import tempfile
 
+    from rust_graph_db_spark import probe
     from rust_graph_db_spark.graphs import knows_graph
     from rust_graph_db_spark.storage import load_graph, save_graph
 
@@ -173,9 +160,7 @@ def _bench_store(spark, sf_dir, timings, exchanges) -> None:
     save_graph(g, root, buckets=cpus)          # untimed one-off re-layout
     gb = load_graph(spark, root)
 
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with probe.conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         jobs = [(q, g, "raw") for q in _STORE_QUERIES] \
              + [(q, gb, "store") for q in _STORE_QUERIES]
         for key, graph, tag in jobs:
@@ -183,23 +168,14 @@ def _bench_store(spark, sf_dir, timings, exchanges) -> None:
             df = _timed(timings, name,
                         lambda: graph.cypher(_STORE_QUERIES[key]))
             if df is not None:
-                exchanges[name] = _n_exchanges(df)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+                exchanges[name] = probe.exchanges(df)
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
 
-    import importlib.util
-
-    spec = importlib.util.spec_from_file_location(
-        "entry", os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                              "__spark_entry__.py"))
-    entry = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(entry)
-
+    import __spark_entry__ as entry
     from rust_graph_db_spark import get_spark
 
     spark = get_spark("bench")

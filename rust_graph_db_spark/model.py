@@ -283,6 +283,7 @@ class PropertyGraph:
         text instead of executing — the plan-audit surface (the
         reference has no EXPLAIN; its AST is interpreted directly,
         SURVEY.md §3.1)."""
+        from rust_graph_db_spark import probe
         from rust_graph_db_spark.parser import parse_cypher
         from rust_graph_db_spark.compiler import compile_query
 
@@ -292,10 +293,9 @@ class PropertyGraph:
         if m:
             mode = (m.group("mode") or "formatted").lower()
             df = compile_query(self, parse_cypher(query[m.end():]), params)
-            jqe = df._jdf.queryExecution()
-            text = self.spark._jvm.PythonSQLUtils.explainString(jqe, mode)
             return self.spark.createDataFrame(
-                [(ln,) for ln in text.splitlines()], "plan STRING")
+                [(ln,) for ln in probe.plan(df, mode).splitlines()],
+                "plan STRING")
         return compile_query(self, parse_cypher(query), params)
 
     # ------------------------------------------------------------------ persist

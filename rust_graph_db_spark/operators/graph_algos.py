@@ -40,6 +40,7 @@ from typing import Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from rust_graph_db_spark import probe
 from rust_graph_db_spark.operators.pregel import pin, supersteps
 from rust_graph_db_spark.operators.traversal import bfs_distances
 
@@ -454,14 +455,11 @@ def _pr_run(edges: DataFrame, iterations: int, damping: float,
         n=F.count(F.lit(1)))
     cap = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     nparts = max(1, min(cap, -(-n_edges // 250_000)))
-    aqe_was = spark.conf.get("spark.sql.adaptive.enabled", "true")
     # shuffle.partitions must equal nparts for the loop: the groupBy
     # re-key otherwise lands on a different partition count than the
     # pinned verts/links layout and the join re-shuffles verts anyway
-    sp_was = spark.conf.get("spark.sql.shuffle.partitions", "200")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", str(nparts))
-    try:
+    with probe.conf(spark, **{"spark.sql.adaptive.enabled": "false",
+                              "spark.sql.shuffle.partitions": str(nparts)}):
         verts, links = _pr_frames(e, nparts, sources, weighted)
         # two lazy steps per pin: the composed 2-iteration plan runs as
         # one job, halving driver barriers; lineage stays O(1)
@@ -470,9 +468,6 @@ def _pr_run(edges: DataFrame, iterations: int, damping: float,
             lambda r: _pr_step(verts, links, r, damping, weighted),
             int(iterations), per_pin=2)
         return ranks
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe_was)
-        spark.conf.set("spark.sql.shuffle.partitions", sp_was)
 
 
 def label_propagation(edges: DataFrame, iterations: int = 5) -> DataFrame:

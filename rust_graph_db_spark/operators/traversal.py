@@ -224,6 +224,10 @@ def weighted_shortest_distances(
     the cluster analog of the reference's driver-side Dijkstra heap).
 
     Returns ``(id, dist)``. Converges when an iteration improves nothing.
+    The distributed path raises ``RuntimeError`` when its ``max_iter``
+    relaxation sweeps run out while the last round still improved a
+    distance: the distances so far are not shortest, and with a negative
+    cycle reachable from a start there are none.
 
     Size-adaptive (the bfs_distances discipline): at or below
     ``driver_threshold`` edges with non-negative weights, ONE Arrow
@@ -300,9 +304,12 @@ def weighted_shortest_distances(
             n=F.count_if(F.col("_imp")))
         dist = merged.select("id", "dist")
         if not n_imp:
-            break
+            return dist
         frontier = merged.where("_imp").select("id", "dist")
-    return dist
+    raise RuntimeError(
+        f"weighted_shortest_distances: not converged within "
+        f"max_iter={max_iter} (a distance still improved; too few sweeps, "
+        f"or a negative cycle is reachable)")
 
 
 def expand_paths(

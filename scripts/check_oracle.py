@@ -120,15 +120,6 @@ def value_hash(pdf):
 PKG = "rust_graph_db_spark"
 
 
-def _load_entry():
-    import importlib.util
-    spec = importlib.util.spec_from_file_location(
-        "entry", os.path.join(ROOT, "__spark_entry__.py"))
-    entry = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(entry)
-    return entry
-
-
 def _package_modules() -> dict:
     """Dotted module name -> source path, for every module of PKG."""
     mods = {}
@@ -180,6 +171,8 @@ def keys_reaching(changed: set) -> dict:
     followed: the root ``__init__`` reaches most of the package, so that
     edge would map every key to every change.
     """
+    import __spark_entry__
+
     mods = _package_modules()
     graph = {}
     for name, path in mods.items():
@@ -203,7 +196,7 @@ def keys_reaching(changed: set) -> dict:
                 if isinstance(n, ast.Name) and n.id in funcs}
 
     out = {}
-    for key, fn in _load_entry().queries().items():
+    for key, fn in __spark_entry__.queries().items():
         top = getattr(fn, "__qualname__", "").split(".")[0]
         if top not in funcs:
             out[key] = sorted(changed)       # unknown shape: run it
@@ -250,8 +243,7 @@ def main() -> None:
             return
         only = set(mapped)
 
-    entry = _load_entry()
-
+    import __spark_entry__ as entry
     from pyspark.sql import types as T
 
     from rust_graph_db_spark import get_spark

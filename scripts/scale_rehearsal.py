@@ -65,17 +65,6 @@ def _gen_docs(spark, n_docs: int, path: str):
      .write.mode("overwrite").parquet(path))
 
 
-def _n_exchanges(df) -> int:
-    import contextlib
-    import io
-    import re
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return len(set(re.findall(r"\((\d+)\) Exchange", buf.getvalue())))
-
-
 def main() -> None:
     n_docs = int(sys.argv[1]) if len(sys.argv) > 1 else 2_000_000
     n_edges = int(sys.argv[2]) if len(sys.argv) > 2 else 10_000_000
@@ -86,6 +75,8 @@ def main() -> None:
 
     import rust_graph_db_spark as rg
     from pyspark.sql import functions as F
+
+    from rust_graph_db_spark import probe
 
     spark = rg.get_spark("scale-rehearsal")
     tmp = tempfile.mkdtemp(prefix="scale_rehearsal_")
@@ -114,7 +105,7 @@ def main() -> None:
         dt = round(time.time() - t, 1)
         results[name] = dt
         print(json.dumps({"stage": name, "rows": n, "sec": dt,
-                          "exchanges": _n_exchanges(df)}))
+                          "exchanges": probe.exchanges(df)}))
 
     from rust_graph_db_spark.operators.dedup import (exact_dedup,
                                                      minhash_lsh_pairs)
@@ -411,9 +402,9 @@ def main() -> None:
         sk = stream_cms_state(spark, st)
         print(json.dumps({"stage": "stream_cms_state",
                           "cell_log_rows": int(cells)}))
-        probe = docs.limit(200000).select(
+        grams = docs.limit(200000).select(
             F.col("text").substr(1, 40).alias("gram"))
-        return cms_estimate(sk, probe, "gram")
+        return cms_estimate(sk, grams, "gram")
     stage("stream_gram_cms_fullcorpus", _stream_cms)
 
     def _curate_stream():

@@ -1,7 +1,7 @@
 import duckdb
 import pytest
 
-from rust_graph_db_spark import get_spark
+from rust_graph_db_spark import get_spark, probe
 from rust_graph_db_spark.graphs import (
     KNOWS_EDGE_CTE, KNOWS_PERSON_CTE, knows_graph, tpch_graph,
 )
@@ -57,32 +57,21 @@ def oracle(duck):
 def pin_jobs(spark, monkeypatch):
     """``pin_jobs(module, fn)`` runs ``fn()`` and returns ``(result,
     jobs outside module.pin calls, number of module.pin calls)``: each
-    pin call runs under a job group of its own, so the count left in
-    the outer group is exactly the Spark work done outside the pins."""
-    import uuid
-
-    sc = spark.sparkContext
-
+    pin call runs in a nested ``probe.jobs`` block of its own, so the
+    count left in the outer block is exactly the Spark work done outside
+    the pins."""
     def run(module, fn):
-        outer, inner = (f"{k}-{uuid.uuid4().hex}" for k in ("outer", "pin"))
         real, calls = module.pin, []
 
         def counted(df, **aggs):
             calls.append(1)
-            sc.setJobGroup(inner, inner)
-            try:
+            with probe.jobs(spark):
                 return real(df, **aggs)
-            finally:
-                sc.setJobGroup(outer, outer)
 
         with monkeypatch.context() as m:
             m.setattr(module, "pin", counted)
-            sc.setJobGroup(outer, outer)
-            try:
+            with probe.jobs(spark) as outer:
                 out = fn()
-            finally:
-                sc.setLocalProperty("spark.jobGroup.id", None)
-        return (out, len(sc.statusTracker().getJobIdsForGroup(outer)),
-                len(calls))
+        return out, outer.n, len(calls)
 
     return run

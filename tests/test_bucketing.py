@@ -4,18 +4,11 @@ SHUFFLE-FREE (bucketed SortMergeJoin, zero Exchange operators). At
 100 TB this is the difference between re-shuffling the edge corpus per
 query and a storage-partitioned join."""
 
-import contextlib
-import io
-
 import pytest
 from pyspark.sql import functions as F
 
-
-def _plan(df) -> str:
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
+from rust_graph_db_spark import probe
+from rust_graph_db_spark.probe import plan as _plan
 
 
 def test_bucketed_expand_join_is_shuffle_free(spark, tmp_path):
@@ -32,23 +25,22 @@ def test_bucketed_expand_join_is_shuffle_free(spark, tmp_path):
     e.write.mode("overwrite").option("path", str(tmp_path / "eb")) \
         .bucketBy(4, "src").sortBy("src").saveAsTable("eb")
 
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        joined = spark.table("eb").join(
-            spark.table("vb"), F.col("src") == F.col("id"))
-        plan = _plan(joined)
-        # bucketed SMJ: matching bucket layouts on both sides, so no
-        # Exchange of any kind appears in the plan
-        assert "Exchange" not in plan, plan
-        assert "SortMergeJoin" in plan
-        # and the same join WITHOUT bucketing does shuffle — the
-        # baseline that proves the assertion has teeth
-        raw = e.join(v, F.col("src") == F.col("id"))
-        assert "Exchange" in _plan(raw)
-        # correctness unchanged
-        assert joined.count() == raw.count()
+        with probe.conf(
+                spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
+            joined = spark.table("eb").join(
+                spark.table("vb"), F.col("src") == F.col("id"))
+            plan = _plan(joined)
+            # bucketed SMJ: matching bucket layouts on both sides, so no
+            # Exchange of any kind appears in the plan
+            assert "Exchange" not in plan, plan
+            assert "SortMergeJoin" in plan
+            # and the same join WITHOUT bucketing does shuffle — the
+            # baseline that proves the assertion has teeth
+            raw = e.join(v, F.col("src") == F.col("id"))
+            assert "Exchange" in _plan(raw)
+            # correctness unchanged
+            assert joined.count() == raw.count()
     finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
         spark.sql("DROP TABLE IF EXISTS vb")
         spark.sql("DROP TABLE IF EXISTS eb")

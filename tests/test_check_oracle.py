@@ -10,11 +10,14 @@ the comparison surface — and rejects non-scalar output columns.
 """
 
 import importlib.util
+import os
+
+SCRIPT = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
+    __file__))), "scripts", "check_oracle.py")
 
 
 def _load():
-    spec = importlib.util.spec_from_file_location(
-        "check_oracle", "scripts/check_oracle.py")
+    spec = importlib.util.spec_from_file_location("check_oracle", SCRIPT)
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod

@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from rust_graph_db_spark import probe
 from rust_graph_db_spark.operators.graph_algos import (
     connected_components, degrees, duplicate_clusters, pagerank,
     triangle_count,
@@ -57,16 +58,9 @@ def test_connected_components_exhausted_rounds_raise(spark):
 
 def _jobs_of(spark, fn):
     """(result, number of Spark jobs fn ran)."""
-    import uuid
-
-    sc = spark.sparkContext
-    group = f"kernel-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
+    with probe.jobs(spark) as rec:
         out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+    return out, rec.n
 
 
 def test_supersteps_probe_rides_in_the_pin_job(spark):
@@ -206,38 +200,21 @@ def test_pagerank_copartitioned_step_single_exchange(spark):
     # (Requires AQE off: under AQE a checkpointed frame's partitioning
     # is Unknown and both exchanges come back — the regression this
     # test guards.)
-    import contextlib
-    import io
-    import re
-
     from rust_graph_db_spark.operators.graph_algos import (
         _pr_frames, _pr_step)
 
     e = spark.createDataFrame(
         [(i, (i + 3) % 50) for i in range(50)], "src LONG, dst LONG") \
         .localCheckpoint(eager=True)
-    aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    bc = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    sp = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    try:
+    with probe.conf(spark, **{"spark.sql.adaptive.enabled": "false",
+                              "spark.sql.autoBroadcastJoinThreshold": "-1",
+                              "spark.sql.shuffle.partitions": "4"}):
         verts, links = _pr_frames(e, nparts=4)
         ranks = verts.withColumn("rank", F.lit(1.0)).localCheckpoint(
             eager=True)
         step = _pr_step(verts, links, ranks, 0.85)
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            step.explain("formatted")
-        # count physical nodes: the formatted plan mentions each
-        # Exchange twice (tree line + "(n) Exchange" detail header)
-        n_ex = len(set(re.findall(r"\((\d+)\) Exchange", buf.getvalue())))
+        n_ex = probe.exchanges(step)
         assert n_ex == 1, f"expected 1 Exchange per iteration, got {n_ex}"
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", aqe)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", bc)
-        spark.conf.set("spark.sql.shuffle.partitions", sp)
 
 
 def test_cypher_union(kg):

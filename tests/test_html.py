@@ -77,16 +77,11 @@ def test_html_extract_edges(spark):
 
 def test_html_extract_plan_is_one_scan(spark):
     """Single codegen'd scan: no Exchange anywhere in the plan."""
-    import contextlib
-    import io
-
+    from rust_graph_db_spark import probe
     from rust_graph_db_spark.operators.html import html_extract
 
     df = spark.createDataFrame([(0, PAGE)], "doc_id LONG, html STRING")
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        html_extract(df, "html").explain("formatted")
-    assert "Exchange" not in buf.getvalue()
+    assert "Exchange" not in probe.plan(html_extract(df, "html"))
 
 
 def test_curate_from_html(spark):

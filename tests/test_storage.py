@@ -10,7 +10,9 @@ import pytest
 from hypothesis import HealthCheck, given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from rust_graph_db_spark import probe
 from rust_graph_db_spark.model import PropertyGraph, unpack_locid
+from rust_graph_db_spark.probe import plan as _plan_str
 from rust_graph_db_spark.storage import (
     CommitConflict, current_version, history, load_graph, save_graph,
 )
@@ -215,16 +217,6 @@ def test_counters_and_labids_roundtrip(spark, tmp_path):
 # ------------------------------------------------- bucketed co-location
 
 
-def _plan_str(df) -> str:
-    import contextlib
-    import io
-
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
-    return buf.getvalue()
-
-
 def test_bucketed_store_expand_join_is_shuffle_free(spark, tmp_path):
     """save_graph(buckets=N) + load_graph => the expand join
     (E.src == V.id) is a zero-Exchange SortMergeJoin off the stored
@@ -249,9 +241,7 @@ def test_bucketed_store_expand_join_is_shuffle_free(spark, tmp_path):
     man = history(root_b)[-1]
     assert all(spec["buckets"] == 4 for spec in man["layout"].values())
 
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with probe.conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         def expand(graph):
             v = graph.vertex_frame("Person")
             e = graph.edge_frame("KNOWS")
@@ -265,8 +255,6 @@ def test_bucketed_store_expand_join_is_shuffle_free(spark, tmp_path):
         rows_b = sorted(map(tuple, expand(gb).collect()))
         rows_p = sorted(map(tuple, expand(gp).collect()))
         assert rows_b == rows_p and len(rows_b) == 4 * n
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_bucketed_store_incremental_commit_keeps_layout(spark, tmp_path):
@@ -333,9 +321,7 @@ def test_bucketed_store_dual_direction_expand(spark, tmp_path):
     gb = load_graph(spark, root)
     assert "KNOWS" in gb._edges_by_dst
 
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with probe.conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         v = gb.vertex_frame("Person")
         e = gb.edge_frame("KNOWS")
         ed = gb.edge_frame_for("KNOWS", "dst")
@@ -360,8 +346,6 @@ def test_bucketed_store_dual_direction_expand(spark, tmp_path):
         got = gb.cypher("MATCH (a:Person)<-[r:KNOWS]-(b:Person) "
                         "RETURN count(*) AS c").first().c
         assert got == 4 * n
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def test_edge_mutation_invalidates_dst_copy(spark, tmp_path):

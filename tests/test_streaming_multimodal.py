@@ -3,6 +3,7 @@
 import pytest
 from pyspark.sql import functions as F
 
+from rust_graph_db_spark import probe
 from rust_graph_db_spark.model import PropertyGraph, pack_graphid
 from rust_graph_db_spark.operators import multimodal as mm
 from rust_graph_db_spark.streaming import (
@@ -234,9 +235,6 @@ def test_stream_upserts_bucketed_commits(spark, tmp_path):
     """commit_buckets=N: every micro-batch publishes a co-located
     snapshot - the manifest layout records the bucketing and a fresh
     reader's expand join is Exchange-free."""
-    import contextlib
-    import io
-
     from rust_graph_db_spark.storage import history, load_graph
 
     src_dir = tmp_path / "stream_in_b"
@@ -266,17 +264,10 @@ def test_stream_upserts_bucketed_commits(spark, tmp_path):
     fresh = load_graph(spark, root)
     assert fresh.vertex_frame("User").count() == 9
 
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
+    with probe.conf(spark, **{"spark.sql.autoBroadcastJoinThreshold": "-1"}):
         v = fresh.vertex_frame("User")
         e = fresh.edge_frame("KNOWS")
-        buf = io.StringIO()
-        with contextlib.redirect_stdout(buf):
-            e.join(v, e["src"] == v["id"]).explain("formatted")
-        assert "Exchange" not in buf.getvalue()
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        assert "Exchange" not in probe.plan(e.join(v, e["src"] == v["id"]))
 
 
 def test_stream_gram_cms_matches_batch_counts(spark, tmp_path):

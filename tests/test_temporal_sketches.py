@@ -446,18 +446,13 @@ def test_topk_per_group_plan_uses_window_group_limit(spark):
     """The 100 TB claim: Spark rewrites the rank filter into
     WindowGroupLimit — per-map-task partial top-k BEFORE the shuffle,
     so the exchange never carries the full corpus."""
-    import contextlib
-    import io
-
+    from rust_graph_db_spark import probe
     from rust_graph_db_spark.operators.sketches import topk_per_group
 
     o = (spark.read.parquet("/root/testdata/sf0.001/orders.parquet")
          .select("o_custkey", "o_orderkey", "o_totalprice"))
-    buf = io.StringIO()
-    with contextlib.redirect_stdout(buf):
-        topk_per_group(o, ["o_custkey"], "o_totalprice", 3,
-                       tiebreak="o_orderkey").explain("formatted")
-    plan = buf.getvalue()
+    plan = probe.plan(topk_per_group(o, ["o_custkey"], "o_totalprice", 3,
+                                     tiebreak="o_orderkey"))
     assert "WindowGroupLimit" in plan
     # both the partial (pre-shuffle) and final form appear
     assert plan.count("WindowGroupLimit") >= 2

@@ -4,6 +4,7 @@ reference unit tests (vle.rs:253-441, shortest_path.rs:256-393)."""
 import pytest
 from pyspark.sql import functions as F
 
+from rust_graph_db_spark import probe
 from rust_graph_db_spark.operators import traversal as T
 
 # A=1 B=2 C=3 D=4 E=5;  A→B, A→C, B→D, B→E, C→E
@@ -118,6 +119,28 @@ def test_weighted_sssp_negative_weights_take_distributed_path(spark):
     assert got[1] == 1.0 and got[3] == 2.0
 
 
+def test_weighted_sssp_distributed_raises_when_sweeps_run_out(spark):
+    # a 12-vertex unit-weight path needs 11 sweeps; 4 reach vertex 4
+    # and the last round still improved, so the partial answer must
+    # not be returned as the shortest distances
+    e = spark.createDataFrame([(i, i + 1, 1.0) for i in range(11)],
+                              "src LONG, dst LONG, weight DOUBLE")
+    with pytest.raises(RuntimeError, match="not converged"):
+        T.weighted_shortest_distances(e, [0], max_iter=4, driver_threshold=0)
+    got = sorted((r.id, r.dist) for r in T.weighted_shortest_distances(
+        e, [0], driver_threshold=0).collect())
+    assert got == [(i, float(i)) for i in range(12)]
+
+
+def test_weighted_sssp_negative_cycle_raises(spark):
+    # 1 → 2 → 1 weighs -2: every sweep improves, so no number of
+    # sweeps converges and no shortest distance exists
+    e = spark.createDataFrame([(0, 1, 1.0), (1, 2, -3.0), (2, 1, 1.0)],
+                              "src LONG, dst LONG, weight DOUBLE")
+    with pytest.raises(RuntimeError, match="not converged"):
+        T.weighted_shortest_distances(e, [0], max_iter=10, driver_threshold=0)
+
+
 def _vpaths(df):
     return sorted(tuple(r.vpath) for r in df.collect())
 
@@ -172,16 +195,10 @@ def test_vle_build_runs_one_job_per_pinned_level(spark, dag):
     """Building a *1..2 expansion pins level 1 only (the seed broadcast
     and the pin itself): no edge-set pin, and the last level is neither
     pinned nor probed; *1..1 runs no job at all."""
-    sc = spark.sparkContext
-
     def build_jobs(lo, hi):
-        group = f"vle-build-{lo}-{hi}"
-        sc.setJobGroup(group, group)
-        try:
+        with probe.jobs(spark) as rec:
             T.expand_paths(dag, [1], lo, hi)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return len(sc.statusTracker().getJobIdsForGroup(group))
+        return rec.n
 
     assert build_jobs(1, 1) == 0
     assert build_jobs(1, 2) <= 2
